@@ -1,20 +1,44 @@
-"""Structured Streaming operators over the events stream.
+"""Structured Streaming twins of batch queries.
 
-The reference is batch-only with file checkpoints (SURVEY §2.10) — this
-module is the brief's forward-looking streaming surface: the same
-hourly/sessionization semantics as queries/events_queries.py, expressed
-as continuous queries so a migration's change-feed (or any event
-stream) can be processed incrementally.
+The reference is batch-only and resumes from file checkpoints (SURVEY
+§2.10); this module is the incremental form of the same idea, so a
+migration's change-feed (or any event or document stream) can be
+processed as it arrives. Every twin is drained with
+trigger(availableNow=True) and must equal its batch twin — the
+registered oracle is shared. Three shapes:
 
-  * hourly counts: watermarked tumbling window — late events beyond
-    the watermark are dropped, state is bounded.
-  * sessionization: applyInPandasWithState keyed by user_id — the
-    stateful 30-minute-gap session counter; state carries (last seen
-    timestamp, open session count) across micro-batches.
+  * Spark-managed state (the `*_stream` functions drained by
+    run_to_memory): watermarked windows, dedup, stream-stream and
+    stream-static joins, native session windows, and
+    applyInPandasWithState sessionization / SCD2.
+  * streaming_incremental_dedup: foreachBatch over an on-disk LSH index
+    that each batch extends with batch_id-scoped overwrites.
+  * snapshot folds (15 twins, one drain loop: run_snapshot_fold). The state
+    is a mergeable summary kept as a chain of parquet snapshots.
 
-Tests run with trigger(availableNow=True) against the static events
-parquet and assert equality with the batch twins — the semantics
-contract between the two implementations.
+Snapshot-fold contract:
+
+  * Arrival staging. The twin's source projection is written as
+    _FOLD_BATCHES id-contiguous single-file arrivals with increasing
+    mtimes (_stage_id_sliced_arrivals), drained one file per
+    micro-batch (maxFilesPerTrigger=1). A NULL id raises: it cannot be
+    routed to a batch, and dropping it would break oracle equality.
+  * Step. Batch i writes `step(prev_snap, batch_df) -> DataFrame` as
+    snapshot `{i + 1:05d}_b`; an empty `00000_init` snapshot of the
+    state schema precedes them. Union-then-merge folds (monoids) and
+    ordered folds that carry a seam across the batch boundary (and
+    refuse out-of-order batches in-plan with raise_error) share the
+    same signature.
+  * Replay. A batch replayed from the checkpoint reads the latest
+    snapshot BEFORE its own name, never its own half-written output, so
+    re-execution rewrites its snapshot byte-identically.
+  * Keep-2. After each batch only its snapshot and the prior one
+    remain; a replay needs only the prior one.
+  * Supersede-on-reinvoke. A second call of a twin for the same
+    (application, sf_dir) deletes the previous call's work dir —
+    including the snapshot backing the previously returned, lazily
+    read DataFrame. Materialize (collect/write) an old result before
+    re-invoking if it is still needed.
 """
 
 from __future__ import annotations
@@ -315,10 +339,41 @@ def streaming_curation_counts(spark: SparkSession, sf_dir: str,
     return spark.table(_query_name)
 
 
-# live work dir per (applicationId, query, source dir) for the
-# incremental-dedup stream — re-invocations replace (and remove) the
-# previous invocation's dir instead of accumulating one per call
+# live work dir per (applicationId, source dir, twin tag), one key per
+# snapshot-fold twin and one for streaming_incremental_dedup — a
+# re-invocation replaces (and removes) the previous invocation's dir
+# instead of accumulating one per call
 _STREAM_WORK_DIRS: dict = {}
+
+# id-contiguous arrival files (= micro-batches) per snapshot-fold twin
+_FOLD_BATCHES = 4
+# snapshots left after each fold batch: its own and the prior one
+_KEEP_SNAPSHOTS = 2
+
+
+def _stream_work_dir(spark: SparkSession, sf_dir: str, tag: str,
+                     prefix: str) -> str:
+    """A fresh work dir under tempfile.gettempdir() for one twin call.
+    It must outlive the call (the returned DataFrame reads it lazily)
+    but not the process, and a long-lived session that re-invokes a
+    twin (bench + correctness + retries) must not accumulate one dir
+    per call: the previous call's dir for the same (application,
+    sf_dir, tag) is removed here, and atexit covers process exit. Not
+    keyed on the query name: the registry wrappers mint a fresh stream
+    name per invocation, which would make every call a distinct key."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    wkey = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), tag)
+    prev = _STREAM_WORK_DIRS.pop(wkey, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    work = tempfile.mkdtemp(prefix=f"{prefix}_")
+    _STREAM_WORK_DIRS[wkey] = work
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
 
 
 def _id_span(df: DataFrame, id_col: str) -> tuple[int | None, int | None]:
@@ -388,8 +443,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     registered oracle check (and tests/test_streaming.py locks it
     against the batch operator directly)."""
     import os
-    import shutil
-    import tempfile
 
     from iq_to_hdl_migration_spark.operators.dedup import (
         build_lsh_index, lsh_batch_deltas)
@@ -412,26 +465,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     batch1 = docs.where(F.col("doc_id") <= cut)
     batch2 = docs.where(F.col("doc_id") > cut)
 
-    import atexit
-
-    # the work dir must outlive this call (the returned DataFrame reads
-    # the pairs parquet lazily) but not the process — and a long-lived
-    # session that re-invokes this query (bench + correctness + retries)
-    # must not accumulate one arrival-copy-of-40%-of-documents dir per
-    # invocation. Keyed per (app, query, source): a re-invocation for
-    # the same source removes the previous invocation's dir (its lazily
-    # returned frame is superseded by the fresh one), so at most one
-    # work dir per key exists at any time; atexit covers process exit.
-    # NOT keyed on _query_name: the registry wrapper mints a fresh
-    # stream name per invocation (q_stream_incdedup_<seq>), which would
-    # make every call a distinct key and resurrect the leak
-    wkey = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _stream_work_dir(spark, sf_dir, "inc_dedup", _query_name)
     bands_dir = os.path.join(work, "bands")
     digests_dir = os.path.join(work, "digests")
     arrivals_dir = os.path.join(work, "arrivals")
@@ -692,92 +726,26 @@ def streaming_dsir_gate(spark: SparkSession, sf_dir: str,
     return spark.table(_query_name)
 
 
-def streaming_bottomk_sample(spark: SparkSession, sf_dir: str, k: int,
-                             _query_name: str = "stream_bottomk",
-                             n_batches: int = 4) -> DataFrame:
-    """Streaming twin of the consistent bottom-k-by-hash sampler: the
-    documents corpus arrives as id-contiguous micro-batches; each
-    batch folds into an on-disk per-lang bottom-k snapshot (merge =
-    bottom-k of previous-snapshot ∪ batch's bottom-k — the
-    mergeability property the batch query advertises and
-    tests/test_properties.py locks for KMV, exercised here end-to-end
-    with real micro-batch state).  Replay-safe: batch i always
-    recomputes from snapshot i-1 (never its own half-written output),
-    so re-execution is a byte-identical rewrite; state per lang is k
-    rows forever, independent of stream length.  The final snapshot
-    equals the single-shot batch sample — that equality is the
-    registered oracle check.
+# ---------------------------------------------------------------------------
+# Snapshot folds: ONE drain loop (run_snapshot_fold) and ONE twin set-up
+# (_fold_twin); a twin is its source projection, id column, state
+# schema, step and report tail. The contract is in the module docstring.
+# ---------------------------------------------------------------------------
 
-    Supersede-on-reinvoke contract: a second call for the same
-    (application, sf_dir) deletes the previous call's work dir —
-    including the snapshot files backing the previously returned
-    lazily-read DataFrame. Callers must not hold two live frames from
-    successive invocations; materialize (collect/write) before
-    re-invoking if the old result is still needed."""
-    import atexit
+def run_snapshot_fold(spark: SparkSession, arrivals_dir: str,
+                      snap_dir: str, ckpt_dir: str, step) -> None:
+    """Drain the arrivals dir (one file per micro-batch, availableNow),
+    folding batch i into the snapshot chain under snap_dir as
+    `step(prev_snap, batch_df)` written to `{i + 1:05d}_b`. Resumable:
+    a later call with the same checkpoint dir picks up where the stream
+    left off, and a replayed batch recomputes from the PRIOR snapshot
+    (never its own half-written output), so re-execution rewrites its
+    snapshot byte-identically. After each batch only the latest
+    _KEEP_SNAPSHOTS snapshots remain."""
     import os
     import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "lang", F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), "
-               "16, 10) AS BIGINT)").alias("hv"))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "bottomk")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-
-    # empty initial snapshot (sorts before every numbered one)
-    docs.limit(0).write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    # id-contiguous arrival files with increasing mtimes so the file
-    # source drains them in arrival order
-    lo, hi = _id_span(docs, "doc_id")
-    if hi is None:
-        # empty corpus: nothing to stream — the empty init snapshot
-        # IS the final state (matches the batch sampler on 0 rows)
-        return spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-    _stage_id_sliced_arrivals(docs, "doc_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_bottomk_fold(spark, arrivals_dir, snap_dir, ckpt_dir, k)
-    final = sorted(os.listdir(snap_dir))[-1]
-    return spark.read.parquet(os.path.join(snap_dir, final))
-
-
-def run_bottomk_fold(spark: SparkSession, arrivals_dir: str,
-                     snap_dir: str, ckpt_dir: str, k: int) -> None:
-    """Drain the arrivals dir (one file per micro-batch, availableNow)
-    folding each batch into the per-lang bottom-k snapshot chain under
-    snap_dir. Resumable: a later call with the same checkpoint dir
-    picks up where the stream left off (the restart test locks this),
-    and a replayed batch recomputes from the PRIOR snapshot, so
-    re-execution rewrites its own snapshot byte-identically."""
-    import os
-
-    from pyspark.sql import Window
 
     schema = spark.read.parquet(arrivals_dir).schema
-    w = Window.partitionBy("lang").orderBy("hv", "doc_id")
-
-    def _bottomk(df: DataFrame) -> DataFrame:
-        return (df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= k).drop("_rn"))
 
     def _latest_before(batch_id: int) -> str:
         subs = sorted(d for d in os.listdir(snap_dir)
@@ -786,10 +754,12 @@ def run_bottomk_fold(spark: SparkSession, arrivals_dir: str,
 
     def _process(batch_df, batch_id) -> None:
         prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = _bottomk(prev_snap.unionByName(
-            _bottomk(batch_df.select("lang", "doc_id", "hv"))))
-        (merged.write.mode("overwrite")
+        (step(prev_snap, batch_df).write.mode("overwrite")
          .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
+        # this batch's snapshot and its prior (all a replay of this
+        # batch reads) stay; older ones belong to committed batches
+        for d in sorted(os.listdir(snap_dir))[:-_KEEP_SNAPSHOTS]:
+            shutil.rmtree(os.path.join(snap_dir, d), ignore_errors=True)
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
@@ -799,9 +769,106 @@ def run_bottomk_fold(spark: SparkSession, arrivals_dir: str,
     q.awaitTermination()
 
 
+def _fold_twin(spark: SparkSession, sf_dir: str, tag: str,
+               query_name: str, source: DataFrame, id_col: str,
+               state_schema, step) -> DataFrame:
+    """Stage `source` as _FOLD_BATCHES id-contiguous arrivals in a fresh
+    work dir, drain them through run_snapshot_fold from an empty
+    `state_schema` snapshot, and return the final snapshot (the empty
+    initial one when `source` has no rows)."""
+    import os
+
+    work = _stream_work_dir(spark, sf_dir, tag, query_name)
+    arrivals_dir = os.path.join(work, "arrivals")
+    snap_dir = os.path.join(work, "snaps")
+    ckpt_dir = os.path.join(work, "ckpt")
+    os.makedirs(arrivals_dir)
+    os.makedirs(snap_dir)
+    # from an empty JVM RDD: an empty local list would still start
+    # Python workers just to write no rows
+    spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                          state_schema).write.parquet(
+        os.path.join(snap_dir, "00000_init"))
+
+    lo, hi = _id_span(source, id_col)
+    if hi is not None:
+        _stage_id_sliced_arrivals(source, id_col, lo, hi, _FOLD_BATCHES,
+                                  work, arrivals_dir)
+        run_snapshot_fold(spark, arrivals_dir, snap_dir, ckpt_dir, step)
+
+    final = sorted(os.listdir(snap_dir))[-1]
+    return spark.read.parquet(os.path.join(snap_dir, final))
+
+
+def bottomk_step(k: int):
+    """Fold step: per-lang bottom-k of previous-snapshot ∪ the batch's
+    bottom-k."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("lang").orderBy("hv", "doc_id")
+
+    def _bottomk(df: DataFrame) -> DataFrame:
+        return (df.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") <= k).drop("_rn"))
+
+    def step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
+        return _bottomk(prev_snap.unionByName(
+            _bottomk(batch_df.select("lang", "doc_id", "hv"))))
+
+    return step
+
+
+def streaming_bottomk_sample(spark: SparkSession, sf_dir: str, k: int,
+                             _query_name: str = "stream_bottomk"
+                             ) -> DataFrame:
+    """Streaming twin of the consistent bottom-k-by-hash sampler: the
+    documents corpus arrives as id-contiguous micro-batches; each
+    batch folds into an on-disk per-lang bottom-k snapshot (merge =
+    bottom-k of previous-snapshot ∪ batch's bottom-k — the
+    mergeability property the batch query advertises and
+    tests/test_properties.py locks for KMV, exercised here end-to-end
+    with real micro-batch state). State per lang is k rows forever,
+    independent of stream length. The final snapshot equals the
+    single-shot batch sample — that equality is the registered oracle
+    check."""
+    from iq_to_hdl_migration_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "lang", F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), "
+               "16, 10) AS BIGINT)").alias("hv"))
+    return _fold_twin(spark, sf_dir, "bottomk", _query_name, docs,
+                      "doc_id", docs.schema, bottomk_step(k))
+
+
+def basket_step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold step: the batch's pair/item/total basket supports, summed
+    per (part_a, part_b) with the previous snapshot."""
+    from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
+        basket_pair_supports)
+
+    baskets = (batch_df.groupBy("l_orderkey")
+               .agg(F.sort_array(F.collect_set("l_partkey"))
+                    .alias("parts")))
+    pairs = basket_pair_supports(baskets).select(
+        "part_a", "part_b", F.col("n_ab").alias("n"))
+    items = (baskets.select(F.explode("parts").alias("part_a"))
+             .groupBy("part_a")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+             .select("part_a", F.lit(None).cast("bigint")
+                     .alias("part_b"), "n"))
+    tot = (baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+           .select(F.lit(None).cast("bigint").alias("part_a"),
+                   F.lit(None).cast("bigint").alias("part_b"), "n"))
+    delta = pairs.unionByName(items).unionByName(tot)
+    return (prev_snap.unionByName(delta)
+            .groupBy("part_a", "part_b")
+            .agg(F.sum("n").cast("bigint").alias("n")))
+
+
 def streaming_market_basket(spark: SparkSession, sf_dir: str,
-                            _query_name: str = "stream_basket",
-                            n_batches: int = 4) -> DataFrame:
+                            _query_name: str = "stream_basket"
+                            ) -> DataFrame:
     """Streaming twin of orders_market_basket_lift: lineitem arrives as
     orderkey-contiguous micro-batches (a basket is an atomic order
     event, so every order lands whole in exactly one batch) and each
@@ -810,55 +877,19 @@ def streaming_market_basket(spark: SparkSession, sf_dir: str,
     and both-NULL the order total. Merge = groupBy(keys).sum(n): pair/
     item/total supports are all additive across disjoint order sets,
     which is the mergeability the batch query's one-pass design
-    advertises. Replay-safe like the bottom-k fold (batch i recomputes
-    from snapshot i-1); the final report equals the single-shot batch
-    result (shared oracle). State grows with distinct pairs — the
-    production variant prunes below min-support with a lossy-counting
-    bound; at this corpus the pair domain is orders x width^2.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample —
-    a second call for the same (application, sf_dir) deletes the
-    previous call's snapshot files."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    advertises. The final report equals the single-shot batch result
+    (shared oracle). State grows with distinct pairs — the production
+    variant prunes below min-support with a lossy-counting bound; at
+    this corpus the pair domain is orders x width^2."""
     from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
-        _BASKET_MIN_SUP, basket_lift_report, basket_pair_supports)
+        _BASKET_MIN_SUP, basket_lift_report)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "basket")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-
-    empty = spark.createDataFrame(
-        [], "part_a bigint, part_b bigint, n bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(li, "l_orderkey")
-    if hi is None:
-        return spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-    _stage_id_sliced_arrivals(li, "l_orderkey", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_basket_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "basket", _query_name, li,
+                      "l_orderkey", "part_a bigint, part_b bigint, n bigint",
+                      basket_step)
     pair_sup = (snap.where(F.col("part_b").isNotNull())
                 .select("part_a", "part_b", F.col("n").alias("n_ab"))
                 .where(F.col("n_ab") >= _BASKET_MIN_SUP))
@@ -870,59 +901,19 @@ def streaming_market_basket(spark: SparkSession, sf_dir: str,
     return basket_lift_report(pair_sup, item_sup, tot)
 
 
-def run_basket_fold(spark: SparkSession, arrivals_dir: str,
-                    snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding each batch's basket supports into
-    the unified additive snapshot chain. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot, so re-execution rewrites its snapshot byte-identically."""
-    import os
-
-    from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
-        basket_pair_supports)
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
-        baskets = (batch_df.groupBy("l_orderkey")
-                   .agg(F.sort_array(F.collect_set("l_partkey"))
-                        .alias("parts")))
-        pairs = basket_pair_supports(baskets).select(
-            "part_a", "part_b", F.col("n_ab").alias("n"))
-        items = (baskets.select(F.explode("parts").alias("part_a"))
-                 .groupBy("part_a")
-                 .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-                 .select("part_a", F.lit(None).cast("bigint")
-                         .alias("part_b"), "n"))
-        tot = (baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-               .select(F.lit(None).cast("bigint").alias("part_a"),
-                       F.lit(None).cast("bigint").alias("part_b"), "n"))
-        return pairs.unionByName(items).unionByName(tot)
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("part_a", "part_b")
-                  .agg(F.sum("n").cast("bigint").alias("n")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def ab_test_step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold step: per-user conversion flags, merged with max() (the
+    idempotent OR-monoid)."""
+    delta = (batch_df.groupBy("user_id")
+             .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
+                        .otherwise(0)).cast("int").alias("is_conv")))
+    return (prev_snap.unionByName(delta)
+            .groupBy("user_id")
+            .agg(F.max("is_conv").cast("int").alias("is_conv")))
 
 
 def streaming_ab_test(spark: SparkSession, sf_dir: str,
-                      _query_name: str = "stream_ab",
-                      n_batches: int = 4) -> DataFrame:
+                      _query_name: str = "stream_ab") -> DataFrame:
     """Streaming twin of events_ab_test_report: events arrive as
     event_id-contiguous micro-batches (a user's events deliberately
     SPAN batches) and each batch folds into a per-user conversion
@@ -931,53 +922,17 @@ def streaming_ab_test(spark: SparkSession, sf_dir: str,
     aggregate needs. Variant assignment is a stateless md5 hash of the
     user id (content-addressed — no assignment table in state), so
     snapshot state is exactly one row per distinct user, the minimum
-    any exact per-user metric can hold. Replay-safe like the other
-    folds (batch i recomputes from snapshot i-1); the final report
-    equals the single-shot batch result bit-for-bit (shared oracle).
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample —
-    a second call for the same (application, sf_dir) deletes the
-    previous call's snapshot files."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    any exact per-user metric can hold. The final report equals the
+    single-shot batch result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
         ab_test_report_tail)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "ab_test")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame([], "user_id bigint, is_conv int")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return ab_test_report_tail(_ab_assign(snap))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_ab_test_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "ab_test", _query_name, ev,
+                      "event_id", "user_id bigint, is_conv int",
+                      ab_test_step)
     return ab_test_report_tail(_ab_assign(snap))
 
 
@@ -990,126 +945,19 @@ def _ab_assign(snap: DataFrame) -> DataFrame:
         F.col("is_conv"))
 
 
-def run_ab_test_fold(spark: SparkSession, arrivals_dir: str,
-                     snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding each batch's per-user conversion
-    flags into the unified snapshot chain. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot, so re-execution rewrites its snapshot byte-identically."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
-        return (batch_df.groupBy("user_id")
-                .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
-                           .otherwise(0)).cast("int").alias("is_conv")))
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("user_id")
-                  .agg(F.max("is_conv").cast("int").alias("is_conv")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-
-def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str,
-                               boiler_set: DataFrame, n: int,
-                               min_docs: int, max_ratio_pct: int,
-                               _query_name: str = "stream_bp",
-                               n_batches: int = 4) -> DataFrame:
-    """Streaming boilerplate gate: documents arrive as doc_id-contiguous
-    micro-batches (a document is atomic) and each batch admits docs
-    whose boilerplate-shingle fraction is <= max_ratio_pct% against a
-    FROZEN boilerplate set — the offline-built index (distinct n-gram
-    shingles recurring in >= min_docs base docs) that an ingest path
-    ships, exactly like the DSIR gate's bucket tables but vocabulary-
-    sized, so it stays a DataFrame joined ON THE SHINGLE KEY rather
-    than a baked-in literal. Per-source kept counts fold ADDITIVELY
-    into a snapshot chain (disjoint doc sets — the basket-fold
-    mergeability); the final report equals the single-shot batch
-    result (shared oracle). Replay-safe: batch i recomputes from
-    snapshot i-1.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "bp_gate")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-
-    empty = spark.createDataFrame(
-        [], "source string, n_docs_kept bigint, n_tokens_kept bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(docs, "doc_id")
-    if hi is None:
-        return spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-    _stage_id_sliced_arrivals(docs, "doc_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_boilerplate_gate_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                              boiler_set, n, max_ratio_pct)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    return spark.read.parquet(os.path.join(snap_dir, final))
-
-
-def run_boilerplate_gate_fold(spark: SparkSession, arrivals_dir: str,
-                              snap_dir: str, ckpt_dir: str,
-                              boiler_set: DataFrame, n: int,
-                              max_ratio_pct: int) -> None:
-    """Drain the arrivals dir: per batch, score each document's
-    boilerplate fraction against the frozen shingle set (stream-side
-    shingles join the static index on the shingle key), admit docs at
-    <= max_ratio_pct%, and fold per-source kept counts additively into
-    the snapshot chain. Resumable under the same checkpoint dir."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
+def boilerplate_gate_step(boiler_set: DataFrame, n: int,
+                          max_ratio_pct: int):
+    """Fold step: score each document's boilerplate fraction against
+    the frozen shingle set (stream-side shingles join the static index
+    on the shingle key), admit docs at <= max_ratio_pct%, and add the
+    per-source kept counts to the previous snapshot."""
     toks = r"split(lower(trim(text)), '\\s+')"
     gs = (f"CASE WHEN size(t) >= {n} THEN "
           f"array_distinct(transform(sequence(1, size(t) - {n} + 1), "
           f"i -> concat_ws(' ', slice(t, i, {n})))) "
           f"ELSE array() END")
 
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
+    def step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
         g = (batch_df
              .withColumn("t", F.expr(toks))
              .withColumn("nt", F.size("t").cast("bigint"))
@@ -1129,32 +977,61 @@ def run_boilerplate_gate_fold(spark: SparkSession, arrivals_dir: str,
         # have zero boilerplate and are admitted)
         kept = per_doc.where(F.col("n_boiler") * 100
                              <= F.col("n_sh") * max_ratio_pct)
-        return (kept.groupBy("source")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs_kept"),
-                     F.sum("nt").cast("bigint").alias("n_tokens_kept")))
+        delta = (kept.groupBy("source")
+                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs_kept"),
+                      F.sum("nt").cast("bigint").alias("n_tokens_kept")))
+        return (prev_snap.unionByName(delta)
+                .groupBy("source")
+                .agg(F.sum("n_docs_kept").cast("bigint")
+                     .alias("n_docs_kept"),
+                     F.sum("n_tokens_kept").cast("bigint")
+                     .alias("n_tokens_kept")))
 
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("source")
-                  .agg(F.sum("n_docs_kept").cast("bigint")
-                       .alias("n_docs_kept"),
-                       F.sum("n_tokens_kept").cast("bigint")
-                       .alias("n_tokens_kept")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
+    return step
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+
+def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str,
+                               boiler_set: DataFrame, n: int,
+                               min_docs: int, max_ratio_pct: int,
+                               _query_name: str = "stream_bp"
+                               ) -> DataFrame:
+    """Streaming boilerplate gate: documents arrive as doc_id-contiguous
+    micro-batches (a document is atomic) and each batch admits docs
+    whose boilerplate-shingle fraction is <= max_ratio_pct% against a
+    FROZEN boilerplate set — the offline-built index (distinct n-gram
+    shingles recurring in >= min_docs base docs) that an ingest path
+    ships, exactly like the DSIR gate's bucket tables but vocabulary-
+    sized, so it stays a DataFrame joined ON THE SHINGLE KEY rather
+    than a baked-in literal. Per-source kept counts fold ADDITIVELY
+    into a snapshot chain (disjoint doc sets — the basket-fold
+    mergeability); the final report equals the single-shot batch
+    result (shared oracle)."""
+    from iq_to_hdl_migration_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text")
+    return _fold_twin(
+        spark, sf_dir, "bp_gate", _query_name, docs, "doc_id",
+        "source string, n_docs_kept bigint, n_tokens_kept bigint",
+        boilerplate_gate_step(boiler_set, n, max_ratio_pct))
+
+
+def keyed_count_step(keys: list[str]):
+    """Fold step: per-key row counts added to the previous snapshot
+    (merge = sum per key — the additive count monoid)."""
+    def step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
+        delta = (batch_df.groupBy(*keys)
+                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
+        return (prev_snap.unionByName(delta)
+                .groupBy(*keys)
+                .agg(F.sum("n_events").cast("bigint").alias("n_events")))
+
+    return step
 
 
 def streaming_user_activity_gini(spark: SparkSession, sf_dir: str,
-                                 _query_name: str = "stream_gini",
-                                 n_batches: int = 4) -> DataFrame:
+                                 _query_name: str = "stream_gini"
+                                 ) -> DataFrame:
     """Streaming twin of events_poweruser_gini: events arrive as
     event_id-contiguous micro-batches (a user's events deliberately
     SPAN batches) and each batch folds per-user event counts into a
@@ -1163,86 +1040,16 @@ def streaming_user_activity_gini(spark: SparkSession, sf_dir: str,
     Gini itself is NOT computed incrementally (rank sums are not
     mergeable); the final snapshot feeds the SAME closed-form
     histogram tail as the batch query, so the report equals the
-    single-shot batch result bit-for-bit (shared oracle). Replay-safe:
-    batch i recomputes from snapshot i-1.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    single-shot batch result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         gini_from_user_counts)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "user_gini")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame([], "user_id bigint, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return gini_from_user_counts(snap)
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_user_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "user_gini", _query_name, ev,
+                      "event_id", "user_id bigint, n_events bigint",
+                      keyed_count_step(["user_id"]))
     return gini_from_user_counts(snap)
-
-
-def run_user_count_fold(spark: SparkSession, arrivals_dir: str,
-                        snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding each batch's per-user event
-    counts into the snapshot chain (merge = sum per user). Resumable
-    under the same checkpoint dir; a replayed batch recomputes from
-    the PRIOR snapshot, so re-execution rewrites its snapshot
-    byte-identically."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
-        return (batch_df.groupBy("user_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("user_id")
-                  .agg(F.sum("n_events").cast("bigint").alias("n_events")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -1288,38 +1095,14 @@ def _retention_delta(batch_df: DataFrame) -> DataFrame:
                  .alias("week_mask")))
 
 
-def run_retention_fold(spark: SparkSession, arrivals_dir: str,
-                       snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-user (MIN cohort week,
-    OR week mask) into the snapshot chain. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_retention_delta(batch_df))
-                  .groupBy("user_id")
-                  .agg(F.min("cohort_week").cast("int")
-                       .alias("cohort_week"),
-                       F.expr("bit_or(week_mask)").cast("bigint")
-                       .alias("week_mask")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def retention_step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold step: per-user (MIN cohort week, OR week mask)."""
+    return (prev_snap.unionByName(_retention_delta(batch_df))
+            .groupBy("user_id")
+            .agg(F.min("cohort_week").cast("int")
+                 .alias("cohort_week"),
+                 F.expr("bit_or(week_mask)").cast("bigint")
+                 .alias("week_mask")))
 
 
 def retention_from_state(snap: DataFrame) -> DataFrame:
@@ -1342,67 +1125,33 @@ def retention_from_state(snap: DataFrame) -> DataFrame:
 
 
 def _run_masked_fold(spark: SparkSession, sf_dir: str, key_tag: str,
-                     _query_name: str, n_batches: int) -> DataFrame:
-    """Shared driver for the MIN/OR mask-fold twins (retention,
-    lifecycle — r11 review: the workdir/staging/drain dance was pasted
-    twice): stage event_id-contiguous arrivals, drain the fold, return
-    the FINAL per-user (cohort_week, week_mask) snapshot. Each twin
-    applies its own tail to the same state shape.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+                     _query_name: str) -> DataFrame:
+    """The MIN/OR mask fold shared by the retention and lifecycle
+    twins: the FINAL per-user (cohort_week, week_mask) snapshot. Each
+    twin applies its own tail to the same state shape."""
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), key_tag)
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame([], RETENTION_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_retention_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    return spark.read.parquet(os.path.join(snap_dir, final))
+    return _fold_twin(spark, sf_dir, key_tag, _query_name, ev, "event_id",
+                      RETENTION_STATE_SCHEMA, retention_step)
 
 
 def streaming_retention_cohorts(spark: SparkSession, sf_dir: str,
-                                _query_name: str = "stream_retention",
-                                n_batches: int = 4) -> DataFrame:
+                                _query_name: str = "stream_retention"
+                                ) -> DataFrame:
     """Streaming twin of events_retention_cohorts: events arrive as
     event_id-contiguous micro-batches (a user's signup and activity
     deliberately SPAN batches); per-user state folds with the MIN/OR
     monoid pair above, and the final snapshot feeds the same cohort
     tail as the batch query — bit-for-bit equality (shared oracle)."""
-    snap = _run_masked_fold(spark, sf_dir, "retention", _query_name,
-                            n_batches)
+    snap = _run_masked_fold(spark, sf_dir, "retention", _query_name)
     return retention_from_state(snap)
 
 
 def streaming_lifecycle_stages(spark: SparkSession, sf_dir: str,
-                               _query_name: str = "stream_lifecycle",
-                               n_batches: int = 4) -> DataFrame:
+                               _query_name: str = "stream_lifecycle"
+                               ) -> DataFrame:
     """Streaming twin of events_lifecycle_stages (17th twin): the SAME
     per-user (MIN cohort week, OR active-week bitmask) fold as the
     retention twin — growth accounting needs only the mask half — with
@@ -1415,8 +1164,7 @@ def streaming_lifecycle_stages(spark: SparkSession, sf_dir: str,
     from iq_to_hdl_migration_spark.queries.events_queries import (
         lifecycle_from_user_weeks)
 
-    snap = _run_masked_fold(spark, sf_dir, "lifecycle", _query_name,
-                            n_batches)
+    snap = _run_masked_fold(spark, sf_dir, "lifecycle", _query_name)
     return lifecycle_from_user_weeks(user_weeks_from_state(snap))
 
 
@@ -1472,217 +1220,95 @@ def _bot_batch_delta(batch_df: DataFrame) -> DataFrame:
                  F.max("us").cast("bigint").alias("d_last_us")))
 
 
-def run_bot_count_fold(spark: SparkSession, arrivals_dir: str,
-                       snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-user cadence counts with the
-    boundary-gap carry. Resumable under the same checkpoint dir."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        delta = _bot_batch_delta(batch_df)
-        # the ordered-fold contract: a batch's events must all be
-        # LATER than the carried last_us (id-contiguous arrivals over
-        # time-ordered ids guarantee it; anything else corrupts the
-        # boundary gap, so refuse loudly)
-        joined = prev_snap.join(delta, "user_id", "full")
-        guarded = joined.withColumn(
-            "first_us",
-            F.when(F.col("last_us").isNotNull()
-                   & F.col("first_us").isNotNull()
-                   & (F.col("first_us") <= F.col("last_us")),
-                   F.raise_error(F.concat(
-                       F.lit("bot fold: batch not time-contiguous "
-                             "for user_id="),
-                       F.col("user_id").cast("string"))))
-            .otherwise(F.col("first_us")))
-        boundary = (F.col("last_us").isNotNull()
-                    & F.col("first_us").isNotNull())
-        bgap_subsec = F.when(
-            boundary & ((F.col("first_us") - F.col("last_us"))
-                        < 1_000_000), 1).otherwise(0)
-        merged = guarded.select(
-            "user_id",
-            (F.coalesce("n_events", F.lit(0))
-             + F.coalesce("d_events", F.lit(0))).cast("bigint")
-            .alias("n_events"),
-            (F.coalesce("n_gaps", F.lit(0))
-             + F.coalesce("d_gaps", F.lit(0))
-             + F.when(boundary, 1).otherwise(0)).cast("bigint")
-            .alias("n_gaps"),
-            (F.coalesce("n_subsec", F.lit(0))
-             + F.coalesce("d_subsec", F.lit(0)) + bgap_subsec)
-            .cast("bigint").alias("n_subsec"),
-            (F.coalesce("n_night", F.lit(0))
-             + F.coalesce("d_night", F.lit(0))).cast("bigint")
-            .alias("n_night"),
-            F.coalesce("d_last_us", "last_us").cast("bigint")
-            .alias("last_us"))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def bot_step(prev_snap: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold step: per-user cadence counts with the boundary-gap carry."""
+    delta = _bot_batch_delta(batch_df)
+    # the ordered-fold contract: a batch's events must all be
+    # LATER than the carried last_us (id-contiguous arrivals over
+    # time-ordered ids guarantee it; anything else corrupts the
+    # boundary gap, so refuse loudly)
+    joined = prev_snap.join(delta, "user_id", "full")
+    guarded = joined.withColumn(
+        "first_us",
+        F.when(F.col("last_us").isNotNull()
+               & F.col("first_us").isNotNull()
+               & (F.col("first_us") <= F.col("last_us")),
+               F.raise_error(F.concat(
+                   F.lit("bot fold: batch not time-contiguous "
+                         "for user_id="),
+                   F.col("user_id").cast("string"))))
+        .otherwise(F.col("first_us")))
+    boundary = (F.col("last_us").isNotNull()
+                & F.col("first_us").isNotNull())
+    bgap_subsec = F.when(
+        boundary & ((F.col("first_us") - F.col("last_us"))
+                    < 1_000_000), 1).otherwise(0)
+    return guarded.select(
+        "user_id",
+        (F.coalesce("n_events", F.lit(0))
+         + F.coalesce("d_events", F.lit(0))).cast("bigint")
+        .alias("n_events"),
+        (F.coalesce("n_gaps", F.lit(0))
+         + F.coalesce("d_gaps", F.lit(0))
+         + F.when(boundary, 1).otherwise(0)).cast("bigint")
+        .alias("n_gaps"),
+        (F.coalesce("n_subsec", F.lit(0))
+         + F.coalesce("d_subsec", F.lit(0)) + bgap_subsec)
+        .cast("bigint").alias("n_subsec"),
+        (F.coalesce("n_night", F.lit(0))
+         + F.coalesce("d_night", F.lit(0))).cast("bigint")
+        .alias("n_night"),
+        F.coalesce("d_last_us", "last_us").cast("bigint")
+        .alias("last_us"))
 
 
 def streaming_bot_score(spark: SparkSession, sf_dir: str,
-                        _query_name: str = "stream_bot",
-                        n_batches: int = 4) -> DataFrame:
+                        _query_name: str = "stream_bot") -> DataFrame:
     """Streaming twin of events_bot_score_report (18th twin): the
     seam-carrying cadence fold above, with the final snapshot fed
     through the shared report tail — equal to the single-shot batch
-    report bit-for-bit (shared oracle).
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    report bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         bot_report_from_counts)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "bot_score")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame([], BOT_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_bot_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "bot_score", _query_name, ev,
+                      "event_id", BOT_STATE_SCHEMA, bot_step)
     return bot_report_from_counts(snap.drop("last_us"))
 
 
 # ---------------------------------------------------------------------------
-# Type-diversity twin: per-user-per-type counts are the same additive
-# count monoid as the Gini fold, just keyed on (user_id, event_type)
-# — state is one BIGINT per (user, type) pair, bounded by the type
-# vocabulary (small and fixed), so the snapshot grows with distinct
-# users, not with events. The Simpson-concentration banding is NOT
-# incremental (a ratio of sums of squares is not mergeable); the final
-# snapshot feeds the same integer-exact tail as the batch query.
+# Composite-key count twins (type diversity, DAU/WAU, type-mix drift,
+# Haar energy, Fano factor): per-key counts are the same additive count
+# monoid as the Gini fold, just keyed on a composite key — state is one
+# BIGINT per key, bounded by the key domain (e.g. users x the small,
+# fixed type vocabulary), so the snapshot grows with distinct keys, not
+# with events. The report tails are NOT incremental (ratios of sums of
+# squares, windowed spectra are not mergeable); each final snapshot
+# feeds the same integer-exact tail as its batch query.
 # ---------------------------------------------------------------------------
 
-def run_keyed_count_fold(spark: SparkSession, arrivals_dir: str,
-                         snap_dir: str, ckpt_dir: str,
-                         keys: list[str]) -> None:
-    """run_user_count_fold generalized to a composite key: drain the
-    arrivals dir folding each batch's per-key row counts into the
-    snapshot chain (merge = sum per key — the additive count monoid).
-    Replay-safe: a replayed batch recomputes from the PRIOR snapshot,
-    so re-execution rewrites its snapshot byte-identically."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        delta = (batch_df.groupBy(*keys)
-                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
-        merged = (prev_snap.unionByName(delta)
-                  .groupBy(*keys)
-                  .agg(F.sum("n_events").cast("bigint").alias("n_events")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-
 def streaming_type_diversity(spark: SparkSession, sf_dir: str,
-                             _query_name: str = "stream_diversity",
-                             n_batches: int = 4) -> DataFrame:
+                             _query_name: str = "stream_diversity"
+                             ) -> DataFrame:
     """Streaming twin of events_user_type_diversity: events arrive as
     event_id-contiguous micro-batches (a user's events deliberately
     SPAN batches) and each batch folds per-(user, type) counts into a
-    snapshot via run_keyed_count_fold. The final snapshot feeds the
-    SAME integer-exact Simpson-concentration tail as the batch query,
-    so the report equals the single-shot result bit-for-bit (shared
-    oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    snapshot. The final snapshot feeds the SAME integer-exact
+    Simpson-concentration tail as the batch query, so the report
+    equals the single-shot result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         diversity_from_type_counts)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "type_diversity")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame(
-        [], "user_id bigint, event_type string, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return diversity_from_type_counts(snap)
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["user_id", "event_type"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "type_diversity", _query_name, ev,
+                      "event_id",
+                      "user_id bigint, event_type string, n_events bigint",
+                      keyed_count_step(["user_id", "event_type"]))
     return diversity_from_type_counts(snap)
 
 
@@ -1705,137 +1331,83 @@ _GAP_BUCKET_SQL = ("CAST(CASE WHEN gap_us <= 0 THEN 0 "
                    "ELSE length(bin(gap_us div 1000000)) END AS INT)")
 
 
-def run_gap_hist_fold(spark: SparkSession, arrivals_dir: str,
-                      snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-(user, type) gap-bucket
-    histograms with the boundary-gap carry. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot, so re-execution rewrites its snapshot byte-identically."""
-    import os
-
+def gap_hist_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold step: per-(user, type) gap-bucket histograms with the
+    boundary-gap carry."""
     from pyspark.sql import Window as W_
 
-    schema = spark.read.parquet(arrivals_dir).schema
+    prev_hist = (prev.where(F.col("gap_bucket").isNotNull())
+                 .select("user_id", "event_type", "gap_bucket",
+                         "n_gaps"))
+    prev_seam = (prev.where(F.col("gap_bucket").isNull())
+                 .select("user_id", "event_type", "last_us"))
 
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
+    us = F.unix_micros(F.col("ts"))
+    w = W_.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    o = batch_df.select("user_id", "event_type", us.alias("us"),
+                        F.lag(us).over(w).alias("prev_us"))
+    d_hist = (o.where(F.col("prev_us").isNotNull())
+              .withColumn("gap_us", F.col("us") - F.col("prev_us"))
+              .select("user_id", "event_type",
+                      F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"))
+              .groupBy("user_id", "event_type", "gap_bucket")
+              .agg(F.count(F.lit(1)).cast("bigint").alias("n_gaps")))
+    spans = (o.groupBy("user_id", "event_type")
+             .agg(F.min("us").cast("bigint").alias("first_us"),
+                  F.max("us").cast("bigint").alias("d_last_us")))
 
-    def _process(batch_df, batch_id) -> None:
-        prev = spark.read.parquet(_latest_before(batch_id))
-        prev_hist = (prev.where(F.col("gap_bucket").isNotNull())
-                     .select("user_id", "event_type", "gap_bucket",
-                             "n_gaps"))
-        prev_seam = (prev.where(F.col("gap_bucket").isNull())
-                     .select("user_id", "event_type", "last_us"))
+    # ordered-fold contract: refuse non-contiguous arrivals loudly
+    joined = prev_seam.join(spans, ["user_id", "event_type"], "full")
+    guarded = joined.withColumn(
+        "first_us",
+        F.when(F.col("last_us").isNotNull()
+               & F.col("first_us").isNotNull()
+               & (F.col("first_us") <= F.col("last_us")),
+               F.raise_error(F.concat(
+                   F.lit("gap fold: batch not time-contiguous "
+                         "for user_id="),
+                   F.col("user_id").cast("string"))))
+        .otherwise(F.col("first_us")))
+    boundary = (guarded
+                .where(F.col("last_us").isNotNull()
+                       & F.col("first_us").isNotNull())
+                .withColumn("gap_us",
+                            F.col("first_us") - F.col("last_us"))
+                .select("user_id", "event_type",
+                        F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"),
+                        F.lit(1).cast("bigint").alias("n_gaps")))
+    new_hist = (prev_hist.unionByName(d_hist).unionByName(boundary)
+                .groupBy("user_id", "event_type", "gap_bucket")
+                .agg(F.sum("n_gaps").cast("bigint").alias("n_gaps")))
+    new_seam = guarded.select(
+        "user_id", "event_type",
+        F.coalesce("d_last_us", "last_us").cast("bigint")
+        .alias("last_us"))
 
-        us = F.unix_micros(F.col("ts"))
-        w = W_.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-        o = batch_df.select("user_id", "event_type", us.alias("us"),
-                            F.lag(us).over(w).alias("prev_us"))
-        d_hist = (o.where(F.col("prev_us").isNotNull())
-                  .withColumn("gap_us", F.col("us") - F.col("prev_us"))
-                  .select("user_id", "event_type",
-                          F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"))
-                  .groupBy("user_id", "event_type", "gap_bucket")
-                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_gaps")))
-        spans = (o.groupBy("user_id", "event_type")
-                 .agg(F.min("us").cast("bigint").alias("first_us"),
-                      F.max("us").cast("bigint").alias("d_last_us")))
-
-        # ordered-fold contract: refuse non-contiguous arrivals loudly
-        joined = prev_seam.join(spans, ["user_id", "event_type"], "full")
-        guarded = joined.withColumn(
-            "first_us",
-            F.when(F.col("last_us").isNotNull()
-                   & F.col("first_us").isNotNull()
-                   & (F.col("first_us") <= F.col("last_us")),
-                   F.raise_error(F.concat(
-                       F.lit("gap fold: batch not time-contiguous "
-                             "for user_id="),
-                       F.col("user_id").cast("string"))))
-            .otherwise(F.col("first_us")))
-        boundary = (guarded
-                    .where(F.col("last_us").isNotNull()
-                           & F.col("first_us").isNotNull())
-                    .withColumn("gap_us",
-                                F.col("first_us") - F.col("last_us"))
-                    .select("user_id", "event_type",
-                            F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"),
-                            F.lit(1).cast("bigint").alias("n_gaps")))
-        new_hist = (prev_hist.unionByName(d_hist).unionByName(boundary)
-                    .groupBy("user_id", "event_type", "gap_bucket")
-                    .agg(F.sum("n_gaps").cast("bigint").alias("n_gaps")))
-        new_seam = guarded.select(
-            "user_id", "event_type",
-            F.coalesce("d_last_us", "last_us").cast("bigint")
-            .alias("last_us"))
-
-        snap = (new_hist
-                .withColumn("last_us", F.lit(None).cast("bigint"))
-                .unionByName(new_seam
-                             .withColumn("gap_bucket",
-                                         F.lit(None).cast("int"))
-                             .withColumn("n_gaps",
-                                         F.lit(None).cast("bigint"))
-                             .select("user_id", "event_type",
-                                     "gap_bucket", "n_gaps", "last_us")))
-        (snap.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    return (new_hist
+            .withColumn("last_us", F.lit(None).cast("bigint"))
+            .unionByName(new_seam
+                         .withColumn("gap_bucket",
+                                     F.lit(None).cast("int"))
+                         .withColumn("n_gaps",
+                                     F.lit(None).cast("bigint"))
+                         .select("user_id", "event_type",
+                                 "gap_bucket", "n_gaps", "last_us")))
 
 
 def streaming_gap_histogram(spark: SparkSession, sf_dir: str,
-                            _query_name: str = "stream_gap_hist",
-                            n_batches: int = 4) -> DataFrame:
+                            _query_name: str = "stream_gap_hist"
+                            ) -> DataFrame:
     """Streaming twin of events_gap_powerlaw_histogram: the
     seam-carrying histogram fold above; the final snapshot's histogram
     rows collapse onto (event_type, bucket) — the same report as the
-    single-shot batch query, bit-for-bit (shared oracle).
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    single-shot batch query, bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "gap_hist")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame([], GAP_HIST_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_gap_hist_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "gap_hist", _query_name, ev,
+                      "event_id", GAP_HIST_STATE_SCHEMA, gap_hist_step)
     return (snap.where(F.col("gap_bucket").isNotNull())
             .groupBy("event_type",
                      F.col("gap_bucket").alias("gap_bucket_log2s"))
@@ -1859,214 +1431,121 @@ FUNNEL_STATE_SCHEMA = ("user_id bigint, t_view_us bigint, "
                        "t_click_us bigint, t_buy_us bigint, last_us bigint")
 
 
-def run_funnel_fold(spark: SparkSession, arrivals_dir: str,
-                    snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-user ordered-funnel stage
-    times. Replay-safe: a replayed batch recomputes from the PRIOR
-    snapshot; refuses non-contiguous arrivals loudly."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev = spark.read.parquet(_latest_before(batch_id))
-        us = F.unix_micros(F.col("ts"))
-        b = batch_df.select("user_id", "event_type", us.alias("us"))
-        per_user = (b.groupBy("user_id")
-                    .agg(F.min(F.when(F.col("event_type") == "view",
-                                      F.col("us"))).alias("bv"),
-                         F.min("us").cast("bigint").alias("first_us"),
-                         F.max("us").cast("bigint").alias("d_last_us")))
-        joined = prev.join(per_user, "user_id", "full")
-        # the guard must ride a column the fold actually consumes
-        # (d_last_us feeds every snapshot row's last_us), or column
-        # pruning would silently drop the raise_error
-        guarded = joined.withColumn(
-            "d_last_us",
-            F.when(F.col("last_us").isNotNull()
-                   & F.col("first_us").isNotNull()
-                   & (F.col("first_us") <= F.col("last_us")),
-                   F.raise_error(F.concat(
-                       F.lit("funnel fold: batch not time-contiguous "
-                             "for user_id="),
-                       F.col("user_id").cast("string"))))
-            .otherwise(F.col("d_last_us")))
-        s1 = guarded.select(
-            "user_id", "t_click_us", "t_buy_us",
-            F.coalesce("t_view_us", "bv").cast("bigint")
-            .alias("t_view_us"),
-            F.coalesce("d_last_us", "last_us").cast("bigint")
-            .alias("last_us"))
-        # stage 2: first click strictly after the resolved view time
-        clicks = (b.where(F.col("event_type") == "click")
-                  .join(s1.select("user_id", "t_view_us"), "user_id")
-                  .where(F.col("t_view_us").isNotNull()
-                         & (F.col("us") > F.col("t_view_us")))
-                  .groupBy("user_id")
-                  .agg(F.min("us").cast("bigint").alias("bc")))
-        s2 = (s1.join(clicks, "user_id", "left")
-              .select("user_id", "t_view_us", "t_buy_us", "last_us",
-                      F.coalesce("t_click_us", "bc").cast("bigint")
-                      .alias("t_click_us")))
-        buys = (b.where(F.col("event_type") == "purchase")
-                .join(s2.select("user_id", "t_click_us"), "user_id")
-                .where(F.col("t_click_us").isNotNull()
-                       & (F.col("us") > F.col("t_click_us")))
-                .groupBy("user_id")
-                .agg(F.min("us").cast("bigint").alias("bb")))
-        s3 = (s2.join(buys, "user_id", "left")
-              .select("user_id", "t_view_us", "t_click_us",
-                      F.coalesce("t_buy_us", "bb").cast("bigint")
-                      .alias("t_buy_us"),
-                      "last_us"))
-        (s3.select("user_id", "t_view_us", "t_click_us", "t_buy_us",
-                   "last_us")
-         .write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def funnel_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold step: per-user ordered-funnel stage times; refuses
+    non-contiguous arrivals loudly."""
+    us = F.unix_micros(F.col("ts"))
+    b = batch_df.select("user_id", "event_type", us.alias("us"))
+    per_user = (b.groupBy("user_id")
+                .agg(F.min(F.when(F.col("event_type") == "view",
+                                  F.col("us"))).alias("bv"),
+                     F.min("us").cast("bigint").alias("first_us"),
+                     F.max("us").cast("bigint").alias("d_last_us")))
+    joined = prev.join(per_user, "user_id", "full")
+    # the guard must ride a column the fold actually consumes
+    # (d_last_us feeds every snapshot row's last_us), or column
+    # pruning would silently drop the raise_error
+    guarded = joined.withColumn(
+        "d_last_us",
+        F.when(F.col("last_us").isNotNull()
+               & F.col("first_us").isNotNull()
+               & (F.col("first_us") <= F.col("last_us")),
+               F.raise_error(F.concat(
+                   F.lit("funnel fold: batch not time-contiguous "
+                         "for user_id="),
+                   F.col("user_id").cast("string"))))
+        .otherwise(F.col("d_last_us")))
+    s1 = guarded.select(
+        "user_id", "t_click_us", "t_buy_us",
+        F.coalesce("t_view_us", "bv").cast("bigint")
+        .alias("t_view_us"),
+        F.coalesce("d_last_us", "last_us").cast("bigint")
+        .alias("last_us"))
+    # stage 2: first click strictly after the resolved view time
+    clicks = (b.where(F.col("event_type") == "click")
+              .join(s1.select("user_id", "t_view_us"), "user_id")
+              .where(F.col("t_view_us").isNotNull()
+                     & (F.col("us") > F.col("t_view_us")))
+              .groupBy("user_id")
+              .agg(F.min("us").cast("bigint").alias("bc")))
+    s2 = (s1.join(clicks, "user_id", "left")
+          .select("user_id", "t_view_us", "t_buy_us", "last_us",
+                  F.coalesce("t_click_us", "bc").cast("bigint")
+                  .alias("t_click_us")))
+    buys = (b.where(F.col("event_type") == "purchase")
+            .join(s2.select("user_id", "t_click_us"), "user_id")
+            .where(F.col("t_click_us").isNotNull()
+                   & (F.col("us") > F.col("t_click_us")))
+            .groupBy("user_id")
+            .agg(F.min("us").cast("bigint").alias("bb")))
+    s3 = (s2.join(buys, "user_id", "left")
+          .select("user_id", "t_view_us", "t_click_us",
+                  F.coalesce("t_buy_us", "bb").cast("bigint")
+                  .alias("t_buy_us"),
+                  "last_us"))
+    return s3.select("user_id", "t_view_us", "t_click_us", "t_buy_us",
+                     "last_us")
 
 
 def funnel_counts_from_state(snap: DataFrame) -> DataFrame:
     """Final snapshot -> the 1-row funnel report (shared tail shape
-    with events_funnel_counts)."""
-    return snap.agg(
-        F.sum(F.when(F.col("t_view_us").isNotNull(), 1).otherwise(0))
-        .cast("bigint").alias("n_view"),
-        F.sum(F.when(F.col("t_click_us").isNotNull(), 1).otherwise(0))
-        .cast("bigint").alias("n_view_click"),
-        F.sum(F.when(F.col("t_buy_us").isNotNull(), 1).otherwise(0))
-        .cast("bigint").alias("n_view_click_buy"))
+    with events_funnel_counts). Each sum is coalesced to 0 so an empty
+    snapshot reports (0, 0, 0) like the batch query, not NULLs."""
+    def n_set(col: str):
+        return F.coalesce(F.sum(F.when(F.col(col).isNotNull(), 1)
+                                .otherwise(0)), F.lit(0)).cast("bigint")
+
+    return snap.agg(n_set("t_view_us").alias("n_view"),
+                    n_set("t_click_us").alias("n_view_click"),
+                    n_set("t_buy_us").alias("n_view_click_buy"))
 
 
 def streaming_funnel_counts(spark: SparkSession, sf_dir: str,
-                            _query_name: str = "stream_funnel",
-                            n_batches: int = 4) -> DataFrame:
+                            _query_name: str = "stream_funnel"
+                            ) -> DataFrame:
     """Streaming twin of events_funnel_counts: the ordered-funnel fold
     above; equal to the single-shot batch report bit-for-bit (shared
-    oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    oracle)."""
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "funnel")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame([], FUNNEL_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_funnel_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "funnel", _query_name, ev,
+                      "event_id", FUNNEL_STATE_SCHEMA, funnel_step)
     return funnel_counts_from_state(snap)
 
 
 def streaming_dau_wau(spark: SparkSession, sf_dir: str,
-                      _query_name: str = "stream_dau_wau",
-                      n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_dau_wau, riding the generalized
-    composite-key count fold: per-(user, day) counts are the additive
-    count monoid, and DAU/WAU need only the DISTINCT (user, day)
-    presence — which the count snapshot carries for free (count >= 1).
-    State is one row per active (user, day) pair — the same frame the
-    batch query shuffles once. Final snapshot feeds the shared tail,
-    so the report equals the single-shot batch result bit-for-bit
-    (shared oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+                      _query_name: str = "stream_dau_wau") -> DataFrame:
+    """Streaming twin of events_dau_wau on the composite-key count fold:
+    per-(user, day) counts are the additive count monoid, and DAU/WAU
+    need only the DISTINCT (user, day) presence — which the count
+    snapshot carries for free (count >= 1). State is one row per
+    active (user, day) pair — the same frame the batch query shuffles
+    once. The final snapshot feeds the shared tail, so the report
+    equals the single-shot batch result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         dau_wau_from_user_days)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "user_id", F.to_date("ts").alias("day")))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "dau_wau")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame(
-        [], "user_id bigint, day date, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return dau_wau_from_user_days(snap.select("user_id", "day"))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["user_id", "day"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "dau_wau", _query_name, ev,
+                      "event_id", "user_id bigint, day date, n_events bigint",
+                      keyed_count_step(["user_id", "day"]))
     return dau_wau_from_user_days(snap.select("user_id", "day"))
 
 
 def streaming_type_mix_drift(spark: SparkSession, sf_dir: str,
-                             _query_name: str = "stream_mix_drift",
-                             n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_type_mix_drift_tvd, riding the
-    generalized composite-key count fold on (week, event_type): the
-    weekly type-count matrix is the additive count monoid, bounded by
-    weeks x the fixed type vocabulary — the cheapest state of any twin.
-    The final snapshot feeds the SAME exact-integer TVD tail as the
-    batch query, so the drift report equals the single-shot result
-    bit-for-bit (shared oracle). Supersede-on-reinvoke contract: same
-    as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+                             _query_name: str = "stream_mix_drift"
+                             ) -> DataFrame:
+    """Streaming twin of events_type_mix_drift_tvd on the composite-key
+    count fold over (week, event_type): the weekly type-count matrix is
+    the additive count monoid, bounded by weeks x the fixed type
+    vocabulary — the cheapest state of any twin. The final snapshot
+    feeds the SAME exact-integer TVD tail as the batch query, so the
+    drift report equals the single-shot result bit-for-bit (shared
+    oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         type_mix_drift_from_counts)
     from iq_to_hdl_migration_spark.sources.tables import load_table
@@ -2075,158 +1554,55 @@ def streaming_type_mix_drift(spark: SparkSession, sf_dir: str,
             / 7).cast("int")
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", week.alias("week"), "event_type"))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "type_mix_drift")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame(
-        [], "week int, event_type string, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return type_mix_drift_from_counts(
-            snap.select("week", "event_type",
-                        F.col("n_events").alias("o")))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["week", "event_type"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = _fold_twin(spark, sf_dir, "type_mix_drift", _query_name, ev,
+                      "event_id",
+                      "week int, event_type string, n_events bigint",
+                      keyed_count_step(["week", "event_type"]))
     return type_mix_drift_from_counts(
         snap.select("week", "event_type", F.col("n_events").alias("o")))
 
 
-def streaming_haar_energy(spark: SparkSession, sf_dir: str,
-                          _query_name: str = "stream_haar",
-                          n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_haar_energy_profile, riding the
-    generalized composite-key count fold on (event_type, epoch-hour):
-    the hourly count spine is the additive count monoid bounded by
-    hours x the fixed type vocabulary, and the final snapshot feeds
-    the SAME exact-integer Haar tail, so the multi-resolution energy
-    spectrum equals the single-shot result bit-for-bit (shared
-    oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        haar_energy_from_hourly)
+def _hourly_type_counts(spark: SparkSession, sf_dir: str, tag: str,
+                        query_name: str) -> DataFrame:
+    """The (event_type, epoch-hour) count spine shared by the Haar and
+    Fano twins, as (event_type, h, c)."""
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "event_type",
                   F.expr("unix_micros(ts) div 3600000000").alias("h")))
+    snap = _fold_twin(spark, sf_dir, tag, query_name, ev, "event_id",
+                      "event_type string, h bigint, n_events bigint",
+                      keyed_count_step(["event_type", "h"]))
+    return snap.select("event_type", "h", F.col("n_events").alias("c"))
 
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "haar_energy")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame(
-        [], "event_type string, h bigint, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
+def streaming_haar_energy(spark: SparkSession, sf_dir: str,
+                          _query_name: str = "stream_haar") -> DataFrame:
+    """Streaming twin of events_haar_energy_profile on the composite-key
+    count fold over (event_type, epoch-hour): the hourly count spine is
+    the additive count monoid bounded by hours x the fixed type
+    vocabulary, and the final snapshot feeds the SAME exact-integer
+    Haar tail, so the multi-resolution energy spectrum equals the
+    single-shot result bit-for-bit (shared oracle)."""
+    from iq_to_hdl_migration_spark.queries.events_queries import (
+        haar_energy_from_hourly)
 
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return haar_energy_from_hourly(
-            snap.select("event_type", "h", F.col("n_events").alias("c")))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["event_type", "h"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
     return haar_energy_from_hourly(
-        snap.select("event_type", "h", F.col("n_events").alias("c")))
+        _hourly_type_counts(spark, sf_dir, "haar_energy", _query_name))
 
 
 def streaming_fano_factor(spark: SparkSession, sf_dir: str,
-                          _query_name: str = "stream_fano",
-                          n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_fano_factor_hourly, riding the SAME
-    generalized composite-key count fold as the Haar twin (the
-    (event_type, epoch-hour) count spine is the additive count
-    monoid): the final snapshot feeds the shared exact-integer Fano
-    tail (`fano_from_hourly`), whose spine bounds derive from the
-    counts themselves, so the dispersion report equals the single-shot
-    result bit-for-bit. Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+                          _query_name: str = "stream_fano") -> DataFrame:
+    """Streaming twin of events_fano_factor_hourly on the SAME
+    (event_type, epoch-hour) count fold as the Haar twin: the final
+    snapshot feeds the shared exact-integer Fano tail
+    (`fano_from_hourly`), whose spine bounds derive from the counts
+    themselves, so the dispersion report equals the single-shot result
+    bit-for-bit."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         fano_from_hourly)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
-    ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "event_type",
-                  F.expr("unix_micros(ts) div 3600000000").alias("h")))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "fano_factor")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = spark.createDataFrame(
-        [], "event_type string, h bigint, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return fano_from_hourly(
-            snap.select("event_type", "h",
-                        F.col("n_events").alias("c")), step=1)
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["event_type", "h"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
     return fano_from_hourly(
-        snap.select("event_type", "h", F.col("n_events").alias("c")),
+        _hourly_type_counts(spark, sf_dir, "fano_factor", _query_name),
         step=1)

@@ -4,6 +4,7 @@ semantics contract (SURVEY §2.10 streaming plan)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from iq_to_hdl_migration_spark.queries import load_all
 from iq_to_hdl_migration_spark.streaming import windows as W
@@ -197,15 +198,71 @@ def test_scd2_state_survives_restart(spark, sf_dir, tmp_path):
         "restarted streaming history must equal the batch history"
 
 
+class _Fold:
+    """One snapshot fold under tmp_path: arrivals, snapshot chain and
+    checkpoint dirs, seeded with `init` as the 00000_init snapshot —
+    a state schema (an empty snapshot) or a state DataFrame."""
+
+    def __init__(self, spark, tmp_path, init) -> None:
+        import os
+
+        self.spark, self.tmp_path = spark, tmp_path
+        self.arrivals = str(tmp_path / "arrivals")
+        self.snaps = str(tmp_path / "snaps")
+        self.ckpt = str(tmp_path / "ckpt")
+        os.makedirs(self.arrivals)
+        os.makedirs(self.snaps)
+        if isinstance(init, str):
+            init = spark.createDataFrame([], init)
+        init.write.parquet(os.path.join(self.snaps, "00000_init"))
+
+    def arrive(self, df, i: int) -> None:
+        """Land `df` as single-file arrival i (mtimes follow i)."""
+        import os
+
+        tmp = str(self.tmp_path / f"slice_{i}")
+        df.coalesce(1).write.parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
+        dst = os.path.join(self.arrivals, f"arr_{i:03d}.parquet")
+        os.rename(os.path.join(tmp, part), dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+    def drain(self, step) -> None:
+        W.run_snapshot_fold(self.spark, self.arrivals, self.snaps,
+                            self.ckpt, step)
+
+    def latest(self) -> str:
+        import os
+
+        return sorted(os.listdir(self.snaps))[-1]
+
+    def final(self):
+        import os
+
+        return self.spark.read.parquet(
+            os.path.join(self.snaps, self.latest()))
+
+    def drain_in_two(self, df, id_col: str, step):
+        """The restart contract: the first half of `df` by id arrives,
+        the stream drains and STOPS; the rest arrives and a fresh start
+        resumes from the same checkpoint. Returns the final snapshot."""
+        cut = df.agg(F.expr(f"CAST(max({id_col}) / 2 AS BIGINT)")).first()[0]
+        self.arrive(df.where(F.col(id_col) <= cut), 0)
+        self.drain(step)
+        assert self.latest() != "00000_init", (
+            "first drain must write a snapshot")
+        self.arrive(df.where(F.col(id_col) > cut), 1)
+        self.drain(step)  # resumes
+        return self.final()
+
+
 def test_bottomk_snapshot_survives_restart(spark, sf_dir, tmp_path):
     """Two separate stream starts over one checkpoint: half the corpus
     arrives, the stream drains and STOPS; the rest arrives and a fresh
     start resumes from the checkpoint. The final snapshot must equal
     the single-shot batch bottom-k over the whole corpus — the
     snapshot chain, not the process, is the state."""
-    import os
-
-    import pyspark.sql.functions as F
+    from pyspark.sql import Window
 
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
@@ -214,34 +271,9 @@ def test_bottomk_snapshot_survives_restart(spark, sf_dir, tmp_path):
         "lang", F.col("doc_id").cast("bigint").alias("doc_id"),
         F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), "
                "16, 10) AS BIGINT)").alias("hv"))
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    docs.limit(0).write.parquet(os.path.join(snaps, "00000_init"))
+    final = _Fold(spark, tmp_path, docs.limit(0)).drain_in_two(
+        docs, "doc_id", W.bottomk_step(k))
 
-    cut = docs.agg(F.expr("CAST(max(doc_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(docs.where(F.col("doc_id") <= cut), "arr_000", 1_000_000)
-    W.run_bottomk_fold(spark, arrivals, snaps, ckpt, k)
-    mid = sorted(os.listdir(snaps))[-1]
-    assert mid != "00000_init", "first drain must write a snapshot"
-
-    arrive(docs.where(F.col("doc_id") > cut), "arr_001", 1_000_001)
-    W.run_bottomk_fold(spark, arrivals, snaps, ckpt, k)  # resumes
-
-    final = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    from pyspark.sql import Window
     w = Window.partitionBy("lang").orderBy("hv", "doc_id")
     expect = (docs.withColumn("_rn", F.row_number().over(w))
               .where(F.col("_rn") <= k).drop("_rn"))
@@ -257,44 +289,15 @@ def test_basket_fold_survives_restart(spark, sf_dir, tmp_path):
     checkpoint. The folded supports must equal the single-shot batch
     supports over all orders — sums across disjoint order sets, no
     double counting at the seam."""
-    import os
-
-    import pyspark.sql.functions as F
-
     from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
         basket_pair_supports)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "part_a bigint, part_b bigint, n bigint"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, "part_a bigint, part_b bigint, n bigint"
+                 ).drain_in_two(li, "l_orderkey", W.basket_step)
 
-    cut = li.agg(F.expr("CAST(max(l_orderkey) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(li.where(F.col("l_orderkey") <= cut), "arr_000", 1_000_000)
-    W.run_basket_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(li.where(F.col("l_orderkey") > cut), "arr_001", 1_000_001)
-    W.run_basket_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got_pairs = sorted(
         tuple(r) for r in snap.where(F.col("part_b").isNotNull())
         .select("part_a", "part_b", "n").collect())
@@ -319,42 +322,13 @@ def test_ab_test_fold_survives_restart(spark, sf_dir, tmp_path):
     checkpoint. The folded per-user conversion state must equal the
     single-shot batch per-user state — max(is_conv) across the seam,
     no user lost or double-toggled."""
-    import os
-
-    import pyspark.sql.functions as F
-
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "user_id bigint, is_conv int"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, "user_id bigint, is_conv int"
+                 ).drain_in_two(ev, "event_id", W.ab_test_step)
 
-    cut = ev.agg(F.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(F.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_ab_test_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(ev.where(F.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_ab_test_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got = sorted(tuple(r) for r in snap.collect())
     want = sorted(tuple(r) for r in
                   ev.groupBy("user_id")
@@ -371,10 +345,6 @@ def test_boilerplate_gate_fold_survives_restart(spark, sf_dir, tmp_path):
     STOPS; the rest arrives and a fresh start resumes from the same
     checkpoint. The folded per-source kept counts must equal the
     single-shot batch gate over all documents."""
-    import os
-
-    import pyspark.sql.functions as F
-
     from iq_to_hdl_migration_spark.queries.corpus_queries import (
         _BP_MIN_DOCS, _BP_N, _TOKS_SPARK)
     from iq_to_hdl_migration_spark.sources.tables import load_table
@@ -393,36 +363,11 @@ def test_boilerplate_gate_fold_survives_restart(spark, sf_dir, tmp_path):
               .where(F.col("c") >= _BP_MIN_DOCS)
               .select("g").localCheckpoint())
 
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "source string, n_docs_kept bigint, n_tokens_kept bigint"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
-
-    cut = docs.agg(F.expr("CAST(max(doc_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(docs.where(F.col("doc_id") <= cut), "arr_000", 1_000_000)
-    W.run_boilerplate_gate_fold(spark, arrivals, snaps, ckpt,
-                                boiler, _BP_N, 50)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(docs.where(F.col("doc_id") > cut), "arr_001", 1_000_001)
-    W.run_boilerplate_gate_fold(spark, arrivals, snaps, ckpt,
-                                boiler, _BP_N, 50)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
+    snap = _Fold(
+        spark, tmp_path,
+        "source string, n_docs_kept bigint, n_tokens_kept bigint"
+    ).drain_in_two(docs, "doc_id",
+                   W.boilerplate_gate_step(boiler, _BP_N, 50))
     got = sorted(tuple(r) for r in snap.collect())
 
     # single-shot batch gate over the whole corpus
@@ -454,41 +399,13 @@ def test_user_count_fold_survives_restart(spark, sf_dir, tmp_path):
     resumes from the same checkpoint. The folded per-user counts must
     equal the single-shot batch counts — summed across the seam, no
     user lost or double-counted."""
-    import os
-
-    import pyspark.sql.functions as F
-
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "user_id bigint, n_events bigint"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, "user_id bigint, n_events bigint"
+                 ).drain_in_two(ev, "event_id",
+                                W.keyed_count_step(["user_id"]))
 
-    cut = ev.agg(F.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(F.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_user_count_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(ev.where(F.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_user_count_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got = sorted(tuple(r) for r in snap.collect())
     want = sorted(tuple(r) for r in
                   ev.groupBy("user_id")
@@ -498,6 +415,36 @@ def test_user_count_fold_survives_restart(spark, sf_dir, tmp_path):
         "restarted fold's per-user counts must equal the batch counts")
 
 
+def test_keyed_count_fold_survives_restart(spark, sf_dir, tmp_path):
+    """Composite-key count restart contract (the step behind the type
+    diversity, DAU/WAU, type-mix drift, Haar and Fano twins): per-(user,
+    type) counts folded across the restart must equal the batch counts,
+    and the final snapshot must feed the type-diversity tail to the
+    single-shot batch report."""
+    from iq_to_hdl_migration_spark.queries.events_queries import (
+        diversity_from_type_counts, events_user_type_diversity)
+    from iq_to_hdl_migration_spark.sources.tables import load_table
+
+    keys = ["user_id", "event_type"]
+    ev = load_table(spark, sf_dir, "events").select("event_id", *keys)
+    snap = _Fold(spark, tmp_path,
+                 "user_id bigint, event_type string, n_events bigint"
+                 ).drain_in_two(ev, "event_id", W.keyed_count_step(keys))
+
+    got = sorted(tuple(r) for r in snap.collect())
+    want = sorted(tuple(r) for r in
+                  ev.groupBy(*keys)
+                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
+                  .collect())
+    assert got == want, (
+        "restarted fold's per-key counts must equal the batch counts")
+    got = sorted(tuple(r) for r in
+                 diversity_from_type_counts(snap).collect())
+    want = sorted(tuple(r) for r in
+                  events_user_type_diversity(spark, sf_dir).collect())
+    assert got == want
+
+
 def test_retention_fold_survives_restart(spark, sf_dir, tmp_path):
     """MIN/OR monoid restart contract for the retention twin: half the
     events arrive (signups and activity span the seam), the stream
@@ -505,44 +452,15 @@ def test_retention_fold_survives_restart(spark, sf_dir, tmp_path):
     the same checkpoint. The folded state's cohort matrix must equal
     the single-shot batch computation — no user's cohort lost, no
     active week dropped or double-ORed."""
-    import os
-
-    import pyspark.sql.functions as F
-
     from iq_to_hdl_migration_spark.queries.events_queries import (
         events_retention_cohorts)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.RETENTION_STATE_SCHEMA
-    ).write.parquet(os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, W.RETENTION_STATE_SCHEMA).drain_in_two(
+        ev, "event_id", W.retention_step)
 
-    cut = ev.agg(F.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(F.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_retention_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(ev.where(F.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_retention_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got = sorted(tuple(r) for r in
                  W.retention_from_state(snap).collect())
     want = sorted(tuple(r) for r in
@@ -570,47 +488,21 @@ def test_retention_fold_rejects_out_of_range_weeks(spark):
             W._retention_delta(bad).collect()
 
 
+
 def test_bot_fold_survives_restart(spark, sf_dir, tmp_path):
     """Seam-carrying fold restart contract: the boundary gap between
     the two halves must be closed exactly once — the restarted fold's
     per-user state must reproduce the single-shot batch report,
     including gaps that span the arrival seam AND the restart."""
-    import os
-
-    import pyspark.sql.functions as FF
-
     from iq_to_hdl_migration_spark.queries.events_queries import (
         bot_report_from_counts, events_bot_score_report)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.BOT_STATE_SCHEMA).write.parquet(
-        os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, W.BOT_STATE_SCHEMA).drain_in_two(
+        ev, "event_id", W.bot_step)
 
-    cut = ev.agg(FF.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(FF.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_bot_count_fold(spark, arrivals, snaps, ckpt)
-    arrive(ev.where(FF.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_bot_count_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got = sorted(tuple(r) for r in
                  bot_report_from_counts(snap.drop("last_us")).collect())
     want = sorted(tuple(r) for r in
@@ -618,36 +510,29 @@ def test_bot_fold_survives_restart(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def _assert_refuses_late_batch(spark, tmp_path, state, late, step):
+    """Drive the REAL fold over carried `state` and one `late` batch
+    whose events predate the carried last_us: the in-plan guard must
+    raise, which also proves it survives column pruning."""
+    fold = _Fold(spark, tmp_path, state)
+    fold.arrive(late.withColumn("ts", F.col("ts").cast("timestamp")), 0)
+    with pytest.raises(Exception, match="not time-contiguous"):
+        fold.drain(step)
+
+
 def test_bot_fold_refuses_out_of_order_batch(spark, tmp_path):
     """The ordered-fold contract is enforced in-plan BY THE REAL FOLD:
     a batch whose events predate a user's carried last_us must raise
-    (driving run_bot_count_fold itself proves the guard survives
-    column pruning)."""
-    import os
-
-    import pytest
-
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
+    (driving the bot step through run_snapshot_fold itself proves the
+    guard survives column pruning)."""
     state = spark.createDataFrame(
         [(7, 3, 2, 0, 0, 1_800_000_000_000_000)],  # ~2027 in micros
         W.BOT_STATE_SCHEMA)
-    state.write.parquet(os.path.join(snaps, "00000_init"))
+    # the 2024 event predates the carried ~2027 last_us -> must raise
     late = spark.createDataFrame(
         [(99, 7, "2024-01-01 00:00:01", )],
-        "event_id bigint, user_id bigint, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tmp = str(tmp_path / "slice")
-    late.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    os.rename(os.path.join(tmp, part),
-              os.path.join(arrivals, "arr_000.parquet"))
-    # the 2024 event predates the carried ~2027 last_us -> must raise
-    with pytest.raises(Exception, match="not time-contiguous"):
-        W.run_bot_count_fold(spark, arrivals, snaps, ckpt)
+        "event_id bigint, user_id bigint, ts string")
+    _assert_refuses_late_batch(spark, tmp_path, state, late, W.bot_step)
 
 
 def test_gap_hist_fold_survives_restart(spark, sf_dir, tmp_path):
@@ -655,47 +540,20 @@ def test_gap_hist_fold_survives_restart(spark, sf_dir, tmp_path):
     the arrival seam AND the restart are closed exactly once — the
     resumed fold's histogram must reproduce the single-shot batch
     histogram bit-for-bit."""
-    import os
-
-    import pyspark.sql.functions as FF
-
     from iq_to_hdl_migration_spark.queries.events_queries import (
         events_gap_powerlaw_histogram)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.GAP_HIST_STATE_SCHEMA).write.parquet(
-        os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, W.GAP_HIST_STATE_SCHEMA).drain_in_two(
+        ev, "event_id", W.gap_hist_step)
 
-    cut = ev.agg(FF.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(FF.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_gap_hist_fold(spark, arrivals, snaps, ckpt)
-    arrive(ev.where(FF.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_gap_hist_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got = sorted(tuple(r) for r in
-                 (snap.where(FF.col("gap_bucket").isNotNull())
+                 (snap.where(F.col("gap_bucket").isNotNull())
                   .groupBy("event_type",
-                           FF.col("gap_bucket").alias("gap_bucket_log2s"))
-                  .agg(FF.sum("n_gaps").cast("bigint").alias("n_gaps"))
+                           F.col("gap_bucket").alias("gap_bucket_log2s"))
+                  .agg(F.sum("n_gaps").cast("bigint").alias("n_gaps"))
                   ).collect())
     want = sorted(tuple(r) for r in
                   events_gap_powerlaw_histogram(spark, sf_dir).collect())
@@ -705,72 +563,29 @@ def test_gap_hist_fold_survives_restart(spark, sf_dir, tmp_path):
 def test_gap_hist_fold_refuses_out_of_order_batch(spark, tmp_path):
     """The seam guard must fire in the REAL fold (not a re-built
     expression) — proving it survives column pruning."""
-    import os
-
-    import pytest
-
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
     state = spark.createDataFrame(
         [(7, "click", None, None, 1_800_000_000_000_000)],
         W.GAP_HIST_STATE_SCHEMA)
-    state.write.parquet(os.path.join(snaps, "00000_init"))
     late = spark.createDataFrame(
         [(99, 7, "click", "2024-01-01 00:00:01")],
-        "event_id bigint, user_id bigint, event_type string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tmp = str(tmp_path / "slice")
-    late.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    os.rename(os.path.join(tmp, part),
-              os.path.join(arrivals, "arr_000.parquet"))
-    with pytest.raises(Exception, match="not time-contiguous"):
-        W.run_gap_hist_fold(spark, arrivals, snaps, ckpt)
+        "event_id bigint, user_id bigint, event_type string, ts string")
+    _assert_refuses_late_batch(spark, tmp_path, state, late,
+                               W.gap_hist_step)
 
 
 def test_funnel_fold_survives_restart(spark, sf_dir, tmp_path):
     """Ordered-funnel fold restart contract: stage chains that span
     the arrival seam AND the restart must resolve exactly once — the
     resumed fold reproduces the single-shot batch funnel."""
-    import os
-
-    import pyspark.sql.functions as FF
-
     from iq_to_hdl_migration_spark.queries.events_queries import (
         events_funnel_counts)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.FUNNEL_STATE_SCHEMA).write.parquet(
-        os.path.join(snaps, "00000_init"))
+    snap = _Fold(spark, tmp_path, W.FUNNEL_STATE_SCHEMA).drain_in_two(
+        ev, "event_id", W.funnel_step)
 
-    cut = ev.agg(FF.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(FF.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_funnel_fold(spark, arrivals, snaps, ckpt)
-    arrive(ev.where(FF.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_funnel_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
     got = sorted(tuple(r) for r in
                  W.funnel_counts_from_state(snap).collect())
     want = sorted(tuple(r) for r in
@@ -781,27 +596,108 @@ def test_funnel_fold_survives_restart(spark, sf_dir, tmp_path):
 def test_funnel_fold_refuses_out_of_order_batch(spark, tmp_path):
     """The guard must survive column pruning: a batch predating a
     user's carried last_us raises through the consumed d_last_us."""
-    import os
-
-    import pytest
-
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
     state = spark.createDataFrame(
         [(7, 1_800_000_000_000_000, None, None, 1_800_000_000_000_000)],
         W.FUNNEL_STATE_SCHEMA)
-    state.write.parquet(os.path.join(snaps, "00000_init"))
     late = spark.createDataFrame(
         [(99, 7, "view", "2024-01-01 00:00:01")],
-        "event_id bigint, user_id bigint, event_type string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tmp = str(tmp_path / "slice")
-    late.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    os.rename(os.path.join(tmp, part),
-              os.path.join(arrivals, "arr_000.parquet"))
-    with pytest.raises(Exception, match="not time-contiguous"):
-        W.run_funnel_fold(spark, arrivals, snaps, ckpt)
+        "event_id bigint, user_id bigint, event_type string, ts string")
+    _assert_refuses_late_batch(spark, tmp_path, state, late,
+                               W.funnel_step)
+
+
+def test_snapshot_chain_keeps_two_and_replays(spark, sf_dir, tmp_path):
+    """Keep-2: after four batches the chain holds only the last
+    snapshot and its prior. Deleting the checkpoint's last commit makes
+    the next drain replay that batch from the kept prior snapshot, and
+    the replay rewrites an equal final snapshot."""
+    import os
+
+    from iq_to_hdl_migration_spark.sources.tables import load_table
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type")
+    step = W.keyed_count_step(["user_id", "event_type"])
+    fold = _Fold(spark, tmp_path,
+                 "user_id bigint, event_type string, n_events bigint")
+    lo, hi = W._id_span(ev, "event_id")
+    W._stage_id_sliced_arrivals(ev, "event_id", lo, hi, 4,
+                                str(tmp_path), fold.arrivals)
+    fold.drain(step)
+    assert sorted(os.listdir(fold.snaps)) == ["00003_b", "00004_b"]
+
+    def final_state():
+        snap_dir = os.path.join(fold.snaps, fold.latest())
+        parts = {f for f in os.listdir(snap_dir) if f.startswith("part-")}
+        return parts, sorted(tuple(r) for r in fold.final().collect())
+
+    parts, rows = final_state()
+    commits = os.path.join(fold.ckpt, "commits")
+    for f in ("3", ".3.crc"):     # the commit and its checksum file
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    fold.drain(step)     # replays batch 3 from 00003_b
+    assert os.path.exists(os.path.join(commits, "3")), "batch 3 replayed"
+    assert len(os.listdir(fold.snaps)) <= 2
+    parts_again, rows_again = final_state()
+    assert parts_again != parts, "the replay must rewrite the snapshot"
+    assert rows_again == rows
+    assert rows == sorted(
+        tuple(r) for r in ev.groupBy("user_id", "event_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")).collect())
+
+
+# snapshot twin -> (source table, registry batch twin; None = oracle)
+_SNAPSHOT_TWINS = {
+    "stream_bottomk_sample": ("documents", "sample_bottomk_per_lang"),
+    "stream_market_basket": ("lineitem", "orders_market_basket_lift"),
+    "stream_ab_test": ("events", "events_ab_test_report"),
+    "stream_boilerplate_gate": ("documents", None),
+    "stream_user_gini": ("events", "events_poweruser_gini"),
+    "stream_retention_cohorts": ("events", "events_retention_cohorts"),
+    "stream_lifecycle_stages": ("events", "events_lifecycle_stages"),
+    "stream_bot_score": ("events", "events_bot_score_report"),
+    "stream_type_diversity": ("events", "events_user_type_diversity"),
+    "stream_gap_histogram": ("events", "events_gap_powerlaw_histogram"),
+    "stream_funnel_counts": ("events", "events_funnel_counts"),
+    "stream_dau_wau": ("events", "events_dau_wau"),
+    "stream_type_mix_drift": ("events", "events_type_mix_drift_tvd"),
+    "stream_haar_energy": ("events", "events_haar_energy_profile"),
+    "stream_fano_factor": ("events", "events_fano_factor_hourly"),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_SNAPSHOT_TWINS))
+def test_snapshot_twin_on_empty_source(spark, sf_dir, tmp_path, twin):
+    """Each snapshot twin over a corpus copy whose source table has 0
+    rows (nothing to stream) must return the same columns and rows as
+    its batch twin — the report tail runs on the empty snapshot."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from iq_to_hdl_migration_spark.sources.tables import TABLES, table_path
+    from tests.oracle import assert_matches_oracle
+
+    source, batch = _SNAPSHOT_TWINS[twin]
+    work = str(tmp_path)
+    for t in TABLES:
+        dst = f"{work}/{t}.parquet"
+        if t == source:
+            pq.write_table(pq.read_table(table_path(sf_dir, t)).slice(0, 0),
+                           dst)
+        else:
+            shutil.copy(table_path(sf_dir, t), dst)
+
+    spec = REGISTRY[twin]
+    if batch is None:
+        assert_matches_oracle(spark, spec.fn, spec.oracle, work, twin)
+        return
+
+    def cols_and_rows(df):
+        cols = sorted(df.columns)
+        return cols, sorted(tuple(r) for r in df.select(*cols).collect())
+
+    got = cols_and_rows(spec.fn(spark, work))
+    want = cols_and_rows(REGISTRY[batch].fn(spark, work))
+    assert got == want
