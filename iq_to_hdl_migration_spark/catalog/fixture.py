@@ -9,7 +9,8 @@ Our engine models that catalog as a set of small DataFrames/views — the
 
 The same fixture rows are rendered two ways so every catalog operator is
 hash-checkable by the driver:
-  * `ensure_catalog_views(spark)` — Spark temp views via createDataFrame;
+  * `ensure_catalog_views(spark)` — Spark temp views over Arrow-built
+    local relations (`session.local_frame`), answered on the driver;
   * `duckdb_with_prefix(tables)`  — a `WITH t(...) AS (VALUES ...)` SQL
     prefix so the DuckDB oracle evaluates the *same* query body over the
     *same* rows.
@@ -26,6 +27,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from iq_to_hdl_migration_spark.session import local_frame
 
 # name -> (columns: [(col, kind)], rows); kind in {int, long, str, double}
 CATALOG_FIXTURE: dict[str, tuple[list[tuple[str, str]], list[tuple]]] = {
@@ -350,10 +353,11 @@ def ensure_catalog_views(spark: SparkSession) -> None:
     if key in _REGISTERED:
         return
     for name, (cols, rows) in CATALOG_FIXTURE.items():
-        df = spark.createDataFrame(rows, schema=_spark_schema(cols))
+        df = local_frame(spark, rows, _spark_schema(cols))
         # Catalog snapshots are broadcast-size by definition (SURVEY
-        # §2.3): hint it, because createDataFrame relations carry no
-        # size statistics and would otherwise plan sort-merge joins.
+        # §2.3). Local relations carry size statistics, so the planner
+        # broadcasts them under the default threshold already; the hint
+        # keeps catalog joins broadcast when a session turns that off.
         df.hint("broadcast").createOrReplaceTempView(name)
     _REGISTERED.add(key)
 

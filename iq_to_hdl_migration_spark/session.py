@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "iq_to_hdl_migration_spark",
@@ -54,3 +55,25 @@ def get_spark(app_name: str = "iq_to_hdl_migration_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType) -> DataFrame:
+    """A DataFrame over driver-held rows that plans as a LocalRelation.
+
+    `spark.createDataFrame(<python list>)` plans as a Python-backed
+    LogicalRDD: every query over it runs a Spark job through a Python
+    worker. The same rows handed over as a `pyarrow.Table` in the Arrow
+    form of `schema` become a LocalRelation, which the driver answers
+    without a job and which carries size statistics for the planner.
+    Values must already be of the schema's Python types (`Decimal` for
+    decimals, timezone-aware `datetime` for timestamps)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)

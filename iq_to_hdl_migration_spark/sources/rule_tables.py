@@ -14,6 +14,9 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
+
+from iq_to_hdl_migration_spark.session import local_frame
 
 _DATA = Path(__file__).resolve().parent / "data"
 
@@ -38,5 +41,5 @@ def load_login_policy_defaults(
 
 def options_rules_df(spark: SparkSession,
                      name: str = "dbopts_noncustomer.csv") -> DataFrame:
-    return spark.createDataFrame(
-        [(n,) for n in load_option_names(name)], ["option_name"])
+    return local_frame(spark, [(n,) for n in load_option_names(name)],
+                       StructType([StructField("option_name", StringType())]))
