@@ -733,14 +733,13 @@ def persist_lsh_index(bands: DataFrame, digests: DataFrame,
     """Write the (bands, digests) index with a source fingerprint so a
     later load can detect staleness. Bands are partitioned by band —
     at scale each batch's postings join prunes to colliding partitions;
-    the fingerprint is the same driver-side (path, size, mtime) digest
-    the bucketed staging uses (sources/bucketed.py), so a regenerated
+    the fingerprint is the package's one driver-side (path, size,
+    mtime) digest (sources/memo.py::files_fingerprint), so a regenerated
     corpus invalidates the index even at identical row counts."""
     import json
     import os
 
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
+    from iq_to_hdl_migration_spark.sources.memo import source_fingerprint
 
     spark = bands.sparkSession
     jvm = spark._jvm
@@ -754,7 +753,7 @@ def persist_lsh_index(bands: DataFrame, digests: DataFrame,
     bands.write.mode("overwrite").partitionBy("band") \
         .parquet(os.path.join(path, "bands"))
     digests.write.mode("overwrite").parquet(os.path.join(path, "digests"))
-    meta = {"src_fp": _source_fingerprint(source_df),
+    meta = {"src_fp": source_fingerprint(source_df),
             "params": _INDEX_PARAMS}
     out = fs.create(p, True)
     try:
@@ -772,8 +771,7 @@ def load_lsh_index(spark, source_df: DataFrame,
     import json
     import os
 
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
+    from iq_to_hdl_migration_spark.sources.memo import source_fingerprint
 
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "_meta.json"))
@@ -786,7 +784,7 @@ def load_lsh_index(spark, source_df: DataFrame,
     finally:
         stream.close()
     meta = json.loads(raw.decode("utf-8"))
-    if meta.get("src_fp") != _source_fingerprint(source_df):
+    if meta.get("src_fp") != source_fingerprint(source_df):
         return None
     # format/parameter version: an index persisted by a build with
     # different banding/cap/signature constants (or an older layout)

@@ -18,18 +18,19 @@ from iq_to_hdl_migration_spark.catalog.fixture import ensure_catalog_views
 from iq_to_hdl_migration_spark.ddl import engine as E
 from iq_to_hdl_migration_spark.ddl import rules as R
 from iq_to_hdl_migration_spark.queries import register
+from iq_to_hdl_migration_spark.sources.memo import keyed_memo
 
 _FIXTURE = Path(__file__).resolve().parents[1] / "ddl/fixtures/reload_fixture.sql"
-_CACHE: dict[str, E.RewriteResult] = {}
 
 
 def _result(spark: SparkSession) -> E.RewriteResult:
-    if "r" not in _CACHE:
+    def build() -> E.RewriteResult:
         ensure_catalog_views(spark)
         rules = R.compile_rules(spark, option_names=["Append_Load"])
-        lines = _FIXTURE.read_text().splitlines()
-        _CACHE["r"] = E.rewrite(lines, rules)
-    return _CACHE["r"]
+        return E.rewrite(_FIXTURE.read_text().splitlines(), rules)
+
+    # constant key: the fixture and catalog ship with the package
+    return keyed_memo("ddl_fixture_rewrite", (), build)
 
 
 # Frozen golden (generated from the engine, hand-checked against the

@@ -19,6 +19,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from iq_to_hdl_migration_spark.sources.memo import source_fingerprint
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 # join-key column per fact table (TPC-H orderkey chain)
@@ -37,26 +38,6 @@ def _sf_tag(sf_dir: str) -> str:
     return base.replace(".", "_")
 
 
-def _source_fingerprint(src: DataFrame) -> str:
-    """Driver-side content fingerprint of the files backing `src`:
-    md5 over the sorted (path, size, mtime_ns) triples. Catches
-    regenerated sources even when row counts are preserved (TPC-H
-    regeneration at the same scale factor yields identical
-    cardinalities, so a count probe alone would silently reuse a stale
-    stage). Costs a handful of stat() calls — no scan."""
-    import hashlib
-
-    parts = []
-    for p in sorted(src.inputFiles()):
-        local = p.removeprefix("file:")
-        try:
-            st = os.stat(local)
-            parts.append(f"{local}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f"{local}:unstatable")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
 def stage_bucketed(spark: SparkSession, sf_dir: str,
                    tables: dict[str, str] | None = None,
                    n_buckets: int = 16) -> list[str]:
@@ -73,7 +54,7 @@ def stage_bucketed(spark: SparkSession, sf_dir: str,
     for table, key in (tables or BUCKET_KEYS).items():
         name = bucketed_name(table, n_buckets, tag)
         src = load_table(spark, sf_dir, table)
-        src_fp = _source_fingerprint(src)
+        src_fp = source_fingerprint(src)
         loc = os.path.join(wh, name)
         if not spark.catalog.tableExists(name) and os.path.isdir(loc):
             # files staged by an earlier session; the in-memory
@@ -101,14 +82,14 @@ def stage_bucketed(spark: SparkSession, sf_dir: str,
                          f"SHOW TBLPROPERTIES {name}").collect()}
             if (props.get("spark_graft.src_fp") == src_fp
                     and props.get("spark_graft.staged_fp")
-                    == _source_fingerprint(spark.table(name))):
+                    == source_fingerprint(spark.table(name))):
                 names.append(name)
                 continue
             spark.sql(f"DROP TABLE {name}")
             shutil.rmtree(loc, ignore_errors=True)
         (src.write.bucketBy(n_buckets, key).sortBy(key)
          .format("parquet").saveAsTable(name))
-        staged_fp = _source_fingerprint(spark.table(name))
+        staged_fp = source_fingerprint(spark.table(name))
         spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES "
                   f"('spark_graft.src_fp' = '{src_fp}', "
                   f"'spark_graft.staged_fp' = '{staged_fp}')")

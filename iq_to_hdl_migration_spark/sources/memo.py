@@ -1,14 +1,29 @@
 """Session-scoped memos for derived structures that production
-materializes once (indexes, edge tables, pair graphs) instead of
-rebuilding per report.
+materializes once (indexes, edge tables, pair graphs, resolved
+relations) instead of rebuilding per report.
 
-Every memo is keyed on (tag, applicationId, sf_dir, staged-warehouse
-env, driver-side source fingerprint [+ extras]): a re-stage, corpus
-switch, or in-place rewrite of the source files misses the memo and
-rebuilds — the staleness discipline established by the LSH index's
-fail-closed guard. Values are whatever the builder returns (usually a
+This module is the ONE memo store of the package: every memo is an
+entry of `_MEMOS[tag][key]`, looked up by `keyed_memo` — double-checked
+under a per-tag build lock, so racing callers of one tag build once.
+The key recipe is the same everywhere: (Spark applicationId, the
+input's location, `files_fingerprint` of the input's files [, extras]).
+A restarted session, a re-stage, a corpus switch or an in-place
+rewrite of a source file (new size or mtime) therefore misses the memo
+and rebuilds — the staleness discipline of the LSH index's fail-closed
+guard. Values are whatever the builder returns (usually a
 localCheckpointed DataFrame or a tuple of them); the builder is
 responsible for materializing.
+
+Session-only callers (nothing persisted by this module):
+  - `sources.tables.load_table`: the resolved parquet relation, one tag
+    per table name, keyed on (applicationId, resolved path, fingerprint
+    of the path's listing);
+  - `queries.dedup_queries._incremental_lsh_index`: the resolved
+    incremental LSH index relations and their batch cut;
+  - `queries.snapshot_queries._staged_history`: the committed orders
+    snapshot history's directory;
+  - `queries.ddl_queries._result`: the DDL rewrite of the bundled
+    fixture script (constant key — the fixture ships with the package).
 
 At 100 TB each memoized structure becomes a persisted table (see
 docs/DEPLOY_100TB.md, "Materialized shared structures") — this module
@@ -25,20 +40,20 @@ import json
 import os
 import pathlib
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _MEMOS: dict[str, dict] = {}
 
-# One build lock per memo tag (round 15): the ingest warm-up overlaps
-# independent memo families on driver threads (guide §2.6), so two
-# threads racing into the same tag must not both run build() — the
-# structures are deterministic, but a double build doubles its ingest
-# cost and the loser's checkpoint blocks leak until session end.
-# Per-TAG (not global) locking keeps independent builds concurrent;
-# cross-tag builder dependencies form a DAG, so nested lock
-# acquisition cannot cycle.
+# One build lock per memo tag: the ingest warm-up overlaps independent
+# memo families on driver threads (guide §2.6), so two threads racing
+# into the same tag must not both run build() — a double build doubles
+# its ingest cost, leaks the loser's checkpoint blocks, and for a
+# builder that persists (the incremental LSH index) lets each racer
+# overwrite the other's files. Per-TAG (not global) locking keeps
+# independent builds concurrent; cross-tag builder dependencies form a
+# DAG, so nested lock acquisition cannot cycle.
 _LOCKS_GUARD = threading.Lock()
 _TAG_LOCKS: dict[str, threading.Lock] = {}
 
@@ -48,21 +63,39 @@ def _tag_lock(tag: str) -> threading.Lock:
         return _TAG_LOCKS.setdefault(tag, threading.Lock())
 
 
-def session_memo(tag: str, spark: SparkSession, sf_dir: str,
-                 src: DataFrame, build: Callable[[], object],
-                 extra: tuple = (), single_live: bool = True):
-    """Return the memoized structure for (tag, corpus), building it on
-    first use. `src` is the frame whose backing files fingerprint the
-    corpus; `extra` extends the key (e.g. hyperparameters);
-    `single_live=True` keeps one live entry per tag (the common case —
-    one corpus per session), False lets configs coexist."""
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
+def files_fingerprint(paths: Iterable[str]) -> str:
+    """Driver-side content fingerprint of a file set: md5 over the
+    sorted `path:size:mtime_ns` entries (`file:` scheme stripped).
+    Catches regenerated sources even when row counts are preserved
+    (TPC-H regeneration at the same scale factor yields identical
+    cardinalities, so a count probe alone would silently reuse a stale
+    stage). Costs one stat() per file — no scan. The digest is
+    persisted (memo metas, the LSH index's `_meta.json`, bucketed
+    TBLPROPERTIES, the snapshot history's dir name), so its recipe
+    must not change."""
+    parts = []
+    for p in sorted(paths):
+        local = p.removeprefix("file:")
+        try:
+            st = os.stat(local)
+            parts.append(f"{local}:{st.st_size}:{st.st_mtime_ns}")
+        except OSError:
+            parts.append(f"{local}:unstatable")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
+
+def source_fingerprint(src: DataFrame) -> str:
+    """`files_fingerprint` of the files backing `src`."""
+    return files_fingerprint(src.inputFiles())
+
+
+def keyed_memo(tag: str, key: tuple, build: Callable[[], object],
+               single_live: bool = True):
+    """Return `_MEMOS[tag][key]`, running `build()` on a miss under the
+    tag's lock (double-checked: a racer may have built it while this
+    caller waited). `single_live=True` keeps one live entry per tag —
+    a new key evicts the stale ones; False lets keys coexist."""
     store = _MEMOS.setdefault(tag, {})
-    key = (spark.sparkContext.applicationId, sf_dir,
-           os.environ.get("SPARK_GRAFT_WAREHOUSE", ""),
-           _source_fingerprint(src)) + tuple(extra)
     hit = store.get(key)
     if hit is None:
         with _tag_lock(tag):
@@ -73,6 +106,24 @@ def session_memo(tag: str, spark: SparkSession, sf_dir: str,
                     store.clear()
                 store[key] = hit
     return hit
+
+
+def _corpus_key(spark: SparkSession, sf_dir: str, fp: str,
+                extra: tuple) -> tuple:
+    return (spark.sparkContext.applicationId, sf_dir,
+            os.environ.get("SPARK_GRAFT_WAREHOUSE", ""), fp) + tuple(extra)
+
+
+def session_memo(tag: str, spark: SparkSession, sf_dir: str,
+                 src: DataFrame, build: Callable[[], object],
+                 extra: tuple = (), single_live: bool = True):
+    """Return the memoized structure for (tag, corpus), building it on
+    first use. `src` is the frame whose backing files fingerprint the
+    corpus; `extra` extends the key (e.g. hyperparameters);
+    `single_live=True` keeps one live entry per tag (the common case —
+    one corpus per session), False lets configs coexist."""
+    key = _corpus_key(spark, sf_dir, source_fingerprint(src), extra)
+    return keyed_memo(tag, key, build, single_live)
 
 
 # A rebuild retains this many snapshot versions per part after vacuum:
@@ -240,33 +291,21 @@ def durable_memo(tag: str, spark: SparkSession, sf_dir: str,
     driver-side source fingerprint, so a regenerated corpus (same
     paths, new mtimes) misses and rebuilds rather than serving a stale
     index."""
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
+    fp = source_fingerprint(src)
 
-    store = _MEMOS.setdefault(tag, {})
-    fp = _source_fingerprint(src)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           os.environ.get("SPARK_GRAFT_WAREHOUSE", ""), fp) + tuple(extra)
-    hit = store.get(key)
-    if hit is not None:
-        return hit
-    with _tag_lock(tag):
-        hit = store.get(key)  # double-checked: racer built it
-        if hit is not None:
-            return hit
-        table_dir = table_dir or os.environ.get("SPARK_GRAFT_MEMO_DIR")
+    def load_or_build() -> dict[str, DataFrame]:
+        tdir = table_dir or os.environ.get("SPARK_GRAFT_MEMO_DIR")
         fkey = json.dumps({"fingerprint": fp, "sf_dir": sf_dir,
                            "extra": [str(x) for x in extra]},
                           sort_keys=True)
-        parts = (_load_structure(spark, table_dir, tag, fkey)
-                 if table_dir else None)
+        parts = _load_structure(spark, tdir, tag, fkey) if tdir else None
         if parts is None:
             parts = build()
             assert isinstance(parts, dict), \
                 "durable_memo builders must return named DataFrame parts"
-            if table_dir:
-                _persist_structure(parts, table_dir, tag, fkey)
-        if single_live:
-            store.clear()
-        store[key] = parts
+            if tdir:
+                _persist_structure(parts, tdir, tag, fkey)
         return parts
+
+    return keyed_memo(tag, _corpus_key(spark, sf_dir, fp, extra),
+                      load_or_build, single_live)

@@ -17,6 +17,9 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from iq_to_hdl_migration_spark.sources.memo import (
+    files_fingerprint, keyed_memo)
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -30,27 +33,27 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Session-scoped relation memo: resolving a parquet relation costs a
-# driver round-trip + file listing (~80 ms/table), which dominates
-# sub-second queries that re-load 5 tables per call. The source
-# datasets are immutable by contract (read-only testdata; production
-# snapshots), so reusing the resolved DataFrame is safe. Keyed by
-# Spark application id so a restarted session never sees another
-# session's plans. The warehouse-staging branch bypasses the memo —
-# staged copies can appear mid-session.
-_RELATION_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+def _listing(path: str) -> list[str]:
+    """The files a relation at `path` reads: the entries of a staged
+    dir, or the single source file itself."""
+    if os.path.isdir(path):
+        with os.scandir(path) as it:
+            return [e.path for e in it]
+    return [path]
 
 
-def _staged_listing_fingerprint(staged: str) -> str:
-    """Digest of the staged dir's (name, mtime_ns, size) listing —
-    tens of files, sub-millisecond; any rewrite changes it."""
-    import hashlib
-    entries = []
-    with os.scandir(staged) as it:
-        for e in it:
-            st = e.stat()
-            entries.append(f"{e.name}:{st.st_mtime_ns}:{st.st_size}")
-    return hashlib.md5("|".join(sorted(entries)).encode()).hexdigest()
+def _read_table(spark: SparkSession, path: str, name: str,
+                staged: bool) -> DataFrame:
+    if name == "events" and not staged:
+        try:
+            # Spark <= 4.0 can only read TIMESTAMP(NANOS) as a long;
+            # Spark >= 4.1 ignores this conf and reads it as
+            # TIMESTAMP_NTZ truncated to micros.
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        except Exception:
+            pass
+    df = spark.read.parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,43 +68,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scan stages parallelize across executors — source parquet with one
     row group is unsplittable and pins the whole scan to one task no
     matter how large the cluster.
+
+    The resolved relation is a session memo (`sources.memo`): resolving
+    costs a driver round-trip + file listing (~80 ms/table), which
+    dominates sub-second queries that re-load 5 tables per call. The
+    key is (applicationId, resolved path, fingerprint of the path's
+    file listing), so a restarted session, a staged copy appearing
+    mid-session, or a rewrite of any file under the path — an in-place
+    overwrite of a part file does not bump the dir mtime, so the key
+    stats the files themselves — re-resolves instead of serving a
+    stale plan. Paths of one table coexist (one tag per table name).
     """
+    path = table_path(sf_dir, name)
+    staged = False
     wh = os.environ.get("SPARK_GRAFT_WAREHOUSE")
     if wh:
-        staged = os.path.join(wh, os.path.basename(sf_dir.rstrip("/")), name)
-        if os.path.isdir(staged):
-            # memo keyed by the staged dir's full file listing
-            # (name, mtime_ns, size): an in-place overwrite of a part
-            # file does NOT bump the directory mtime, so the key must
-            # come from the files themselves for restaging (of any
-            # form) to invalidate the cached plan
-            skey = (spark.sparkContext.applicationId, staged,
-                    _staged_listing_fingerprint(staged))
-            memo = _RELATION_MEMO.get(skey)
-            if memo is not None:
-                return memo
-            df = spark.read.parquet(staged)
-            if name == "events":
-                df = normalize_event_ts(df)
-            _RELATION_MEMO[skey] = df
-            return df
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
-    memo = _RELATION_MEMO.get(key)
-    if memo is not None:
-        return memo
-    if name == "events":
-        try:
-            # Spark <= 4.0 can only read TIMESTAMP(NANOS) as a long;
-            # Spark >= 4.1 ignores this conf and reads it as
-            # TIMESTAMP_NTZ truncated to micros.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-        df = normalize_event_ts(spark.read.parquet(table_path(sf_dir, name)))
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
-    _RELATION_MEMO[key] = df
-    return df
+        wh_path = os.path.join(wh, os.path.basename(sf_dir.rstrip("/")), name)
+        if os.path.isdir(wh_path):
+            path, staged = wh_path, True
+    key = (spark.sparkContext.applicationId, path,
+           files_fingerprint(_listing(path)))
+    return keyed_memo(f"relation_{name}", key,
+                      lambda: _read_table(spark, path, name, staged),
+                      single_live=False)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -52,6 +52,215 @@ def test_memo_hit_and_stale_miss(spark, sf_dir, tmp_path):
     assert len(builds) == 2
 
 
+def test_staged_relation_in_place_part_rewrite_re_resolves(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A staged table's relation is keyed on its files, not its dir:
+    rewriting one part file in place leaves the dir mtime as it was,
+    yet the next load must resolve the new file."""
+    from iq_to_hdl_migration_spark.sources.tables import stage_warehouse
+
+    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE", raising=False)
+    wh = str(tmp_path / "wh")
+    stage_warehouse(spark, sf_dir, wh, tables=["nation"])
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", wh)
+    a = load_table(spark, sf_dir, "nation")
+    assert load_table(spark, sf_dir, "nation") is a
+    assert a.count() > 5
+
+    staged = os.path.join(wh, os.path.basename(sf_dir.rstrip("/")),
+                          "nation")
+    (part,) = [f for f in os.listdir(staged) if f.endswith(".parquet")]
+    # write 5 rows elsewhere, then copy them (and their Hadoop .crc
+    # sidecar) over the existing files: no dir entry changes
+    five = str(tmp_path / "five")
+    a.limit(5).coalesce(1).write.parquet(five)
+    (new,) = [f for f in os.listdir(five) if f.endswith(".parquet")]
+    dir_mtime = os.stat(staged).st_mtime_ns
+    shutil.copyfile(os.path.join(five, new), os.path.join(staged, part))
+    shutil.copyfile(os.path.join(five, f".{new}.crc"),
+                    os.path.join(staged, f".{part}.crc"))
+    assert os.stat(staged).st_mtime_ns == dir_mtime
+
+    b = load_table(spark, sf_dir, "nation")
+    assert b is not a, "rewritten part file served a stale relation"
+    assert b.count() == 5
+
+
+def test_source_relation_rewrite_re_resolves(spark, sf_dir, tmp_path):
+    """The source branch of `load_table` carries the file's fingerprint
+    in its key: a `utime` on the source file re-resolves the relation
+    instead of serving the plan resolved before the rewrite."""
+    work = _copy_docs(sf_dir, tmp_path)
+    a = load_table(spark, work, "documents")
+    assert load_table(spark, work, "documents") is a
+    f = os.path.join(work, "documents.parquet")
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert load_table(spark, work, "documents") is not a
+
+
+def test_staged_history_restages_on_source_rewrite(spark, sf_dir,
+                                                   tmp_path, monkeypatch):
+    """Rewriting the orders source restages the snapshot history from
+    the new rows, and the memo tag keeps one live entry (the stale
+    source's entry is evicted, not left behind)."""
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from iq_to_hdl_migration_spark.queries.snapshot_queries import (
+        _staged_history)
+    from iq_to_hdl_migration_spark.sources import memo, snapshots
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    work = str(tmp_path / "corpus")
+    os.makedirs(work)
+    f = os.path.join(work, "orders.parquet")
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), f)
+    memo._MEMOS.pop("snapshot_orders_history", None)
+
+    d1 = _staged_history(spark, work)
+    assert _staged_history(spark, work) == d1
+    n = snapshots.read_snapshot(spark, d1, version=2).count()
+    assert n == load_table(spark, work, "orders").count()
+
+    pq.write_table(pq.read_table(f).slice(0, n // 2), f)
+    d2 = _staged_history(spark, work)
+    assert d2 != d1, "rewritten source served the stale history"
+    assert snapshots.current_version(d2) == 3
+    assert snapshots.read_snapshot(spark, d2, version=2).count() == n // 2
+    assert len(memo._MEMOS["snapshot_orders_history"]) == 1
+    memo._MEMOS.pop("snapshot_orders_history", None)
+
+
+def _spy(monkeypatch, module, name: str) -> list:
+    """Wrap `module.name`; returns the list of its results, appended
+    call by call (thread-safe: list.append is atomic)."""
+    real = getattr(module, name)
+    out = []
+
+    def wrapped(*a, **k):
+        r = real(*a, **k)
+        out.append(r)
+        return r
+
+    monkeypatch.setattr(module, name, wrapped)
+    return out
+
+
+def test_incremental_index_rewrite_goes_through_guard(spark, sf_dir,
+                                                      tmp_path,
+                                                      monkeypatch):
+    """A rewrite of documents.parquet misses the incremental index's
+    session memo, and the persisted index is then refused by
+    load_lsh_index's fail-closed fingerprint guard and rebuilt."""
+    import tempfile
+
+    from iq_to_hdl_migration_spark.operators import dedup
+    from iq_to_hdl_migration_spark.queries.dedup_queries import (
+        _incremental_lsh_index)
+    from iq_to_hdl_migration_spark.sources import memo
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    work = _copy_docs(sf_dir, tmp_path / "corpus")
+    memo._MEMOS.pop("lsh_incremental_index", None)
+    loads = _spy(monkeypatch, dedup, "load_lsh_index")
+    builds = _spy(monkeypatch, dedup, "build_lsh_index")
+
+    r1 = _incremental_lsh_index(spark, work)
+    assert _incremental_lsh_index(spark, work) is r1
+    assert [x is None for x in loads] == [True, False]
+    assert len(builds) == 1
+    n_bands = r1[0].count()
+
+    f = os.path.join(work, "documents.parquet")
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    r2 = _incremental_lsh_index(spark, work)
+    assert r2 is not r1, "rewritten source served a stale index"
+    assert [x is None for x in loads] == [True, False, True, False], \
+        "the persisted index must be refused by the fingerprint guard"
+    assert len(builds) == 2
+    assert r2[2] == r1[2]
+    assert r2[0].count() == n_bands
+    memo._MEMOS.pop("lsh_incremental_index", None)
+
+
+def test_incremental_index_builds_once_under_concurrent_callers(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """The threaded ingest and the query path both resolve the
+    incremental index. Racing callers must build (and persist) it once:
+    two builders would each delete `_meta.json` and overwrite `bands/`
+    under the other."""
+    import tempfile
+    import threading
+
+    from iq_to_hdl_migration_spark.operators import dedup
+    from iq_to_hdl_migration_spark.queries.dedup_queries import (
+        _incremental_lsh_index)
+    from iq_to_hdl_migration_spark.sources import memo
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    memo._MEMOS.pop("lsh_incremental_index", None)
+    builds = _spy(monkeypatch, dedup, "build_lsh_index")
+    gate = threading.Barrier(4)
+    results = [None] * 4
+
+    def run(i):
+        gate.wait(timeout=60)
+        results[i] = _incremental_lsh_index(spark, sf_dir)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    try:
+        assert not any(t.is_alive() for t in threads), "callers hung"
+        assert len(builds) == 1, f"index built {len(builds)} times"
+        assert all(r is results[0] for r in results)
+        bands, digests, _ = results[0]
+        assert bands.count() > 0 and digests.count() > 0
+    finally:
+        memo._MEMOS.pop("lsh_incremental_index", None)
+
+
+def test_no_memo_dicts_outside_the_seam():
+    """`sources/memo.py` is the package's one memo store: no other
+    module binds a module-level dict named like a memo or cache."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / \
+        "iq_to_hdl_migration_spark"
+    seam = pkg / "sources" / "memo.py"
+
+    def is_dict(v) -> bool:
+        return (isinstance(v, (ast.Dict, ast.DictComp))
+                or (isinstance(v, ast.Call)
+                    and isinstance(v.func, (ast.Name, ast.Attribute))
+                    and getattr(v.func, "id", getattr(v.func, "attr", ""))
+                    .lower().endswith("dict")))
+
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == seam:
+            continue
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            for t in targets:
+                if (isinstance(t, ast.Name) and is_dict(value)
+                        and ("MEMO" in t.id.upper()
+                             or "CACHE" in t.id.upper())):
+                    offenders.append(f"{f.relative_to(pkg)}:{t.id}")
+    assert not offenders, f"memo dicts outside sources/memo.py: {offenders}"
+
+
 def test_durable_memo_warm_starts_from_snapshot(spark, sf_dir, tmp_path):
     """The memo→persisted-table swap, mechanized: a build-through
     commits the structure as fingerprint-guarded snapshot tables; a
